@@ -1044,7 +1044,7 @@ def pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     # unpruned scan.
     # batch_cut=False disables the per-batch partial top-k (identical
     # results either way — the cut is a pure exchange-size optimization):
-    # the toggle exists to MEASURE the crossover (SCALE.md r7 bench_diff
+    # the toggle exists to MEASURE the crossover (SCALE.md r7 bench-diff
     # adjudication: the cut's per-batch lexsort costs more than the
     # exchange it saves below ~10^5 corpus rows; it exists for the 200k+
     # regime where the unpruned |q| x corpus exchange was the r5 defect).

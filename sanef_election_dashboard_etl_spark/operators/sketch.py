@@ -60,7 +60,13 @@ def count_min_sketch(df: DataFrame, key_col: str, depth: int = 4,
     depth x |distinct keys| values instead of depth x |rows| — one corpus
     pass and O(vocab) md5 work instead of two passes and O(corpus) — and
     the shared counts subtree is exchange-reused with the exact branch at
-    runtime (plans/r12/sketch_cms_tokens_{before,after}.txt)."""
+    runtime (plans/r12/sketch_cms_tokens_{before,after}.txt).
+
+    Weight contract: every weight must be non-NULL and non-negative. SUM
+    would skip a NULL, and a negative weight breaks the never-
+    underestimates invariant, so either would silently diverge from the
+    raw-row build. Both are ENFORCED with raise_error (the numeric.py
+    GUARD style): the action fails instead of returning a wrong sketch."""
     key = F.col(key_col)
     buckets = F.array(*[_bucket(key, j, width, portable)
                         for j in range(depth)])
@@ -68,8 +74,12 @@ def count_min_sketch(df: DataFrame, key_col: str, depth: int = 4,
         return (df.select(F.posexplode(buckets).alias("j", "bucket"))
                   .groupBy("j", "bucket")
                   .agg(F.count(F.lit(1)).alias("cnt")))
+    w = F.col(weight_col)
+    checked = F.when(w.isNull() | (w < 0), F.raise_error(F.lit(
+        f"count_min_sketch: weight_col {weight_col!r} must be non-NULL "
+        "and non-negative"))).otherwise(w)
     return (df.select(F.posexplode(buckets).alias("j", "bucket"),
-                      F.col(weight_col).alias("__w"))
+                      checked.alias("__w"))
               .groupBy("j", "bucket")
               .agg(F.sum("__w").cast("long").alias("cnt")))
 

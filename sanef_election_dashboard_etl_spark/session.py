@@ -108,12 +108,6 @@ def _ship_package(spark: SparkSession) -> None:
         pass
 
 
-# Harness-level overrides applied on top of _RUNTIME_CONF by tune().
-# bench.py uses this to calibrate for micro-scale runs (e.g. AQE off);
-# empty in normal operation.
-TUNE_OVERRIDES: dict[str, str] = {}
-
-
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally created session.
 
@@ -121,7 +115,7 @@ def tune(spark: SparkSession) -> SparkSession:
     correctness (UTC epochs) and plan quality (AQE, broadcast) do not depend
     on who built the session.
     """
-    for k, v in {**_RUNTIME_CONF, **TUNE_OVERRIDES}.items():
+    for k, v in _RUNTIME_CONF.items():
         spark.conf.set(k, v)
     _ship_package(spark)   # external sessions may run real executors too
     return spark

@@ -987,6 +987,20 @@ def test_cms_weighted_build_equals_raw_build(spark):
         assert dict(weighted.dtypes)["cnt"] == "bigint"
 
 
+@pytest.mark.parametrize("bad", [None, -1])
+def test_cms_weighted_build_rejects_null_and_negative_weights(spark, bad):
+    """A NULL weight (skipped by SUM) or a negative one (breaks the
+    never-underestimates invariant) fails the build loudly."""
+    from sanef_election_dashboard_etl_spark.operators import sketch as SK
+
+    counts = spark.createDataFrame([("a", 10), ("b", bad)],
+                                   "token string, w bigint")
+    sk = SK.count_min_sketch(counts, "token", depth=4, width=256,
+                             weight_col="w")
+    with pytest.raises(Exception, match="non-NULL and non-negative"):
+        sk.collect()
+
+
 def test_cms_absent_key_estimates_zero(spark):
     from sanef_election_dashboard_etl_spark.operators import sketch as SK
 

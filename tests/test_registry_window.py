@@ -1,128 +1,44 @@
-"""Driver-window invariants: the first 50 registry entries are what the
-round driver will check — pinning and rotation must stay deterministic."""
+"""Registry contract: REGISTRY keeps registration order, every rows-only
+entry names an oracle-checked sibling, rows-only outputs stay driver-canon
+safe, and band oracles are well formed."""
 
-from sanef_election_dashboard_etl_spark.queries import (
-    REGISTRY,
-    _PINNED,
-    _WINDOW_SIZE,
-    _driver_coverage,
-)
+import builtins
+import importlib
+import re
+import subprocess
 
-
-def test_pinned_entries_lead_the_registry():
-    names = list(REGISTRY)
-    assert names[:len(_PINNED)] == _PINNED
+import sanef_election_dashboard_etl_spark.queries as queries
+from sanef_election_dashboard_etl_spark.queries import REGISTRY
 
 
-def test_window_is_full_and_rotation_prefers_uncovered():
-    names = list(REGISTRY)[:_WINDOW_SIZE]
-    assert len(names) == _WINDOW_SIZE
-    covered = _driver_coverage()
-    rotated = names[len(_PINNED):]
-    # rotation targets the least-covered entries: while zero-coverage
-    # entries outnumber the slots, every rotated-in entry is one of them
-    zero_pool = [n for n in REGISTRY if n not in _PINNED
-                 and covered.get(n, 0) == 0]
-    if len(zero_pool) >= len(rotated):
-        assert all(covered.get(n, 0) == 0 for n in rotated)
+def test_registry_order_is_registration_order(monkeypatch):
+    """REGISTRY is the @query registration order, a reload rebuilds the
+    same order, and importing the module starts no subprocess and reads
+    no CORRECTNESS_r*.json record."""
+    with open(queries.__file__) as fh:
+        expected = re.findall(r'^@query\("([^"]+)"', fh.read(), re.M)
+    assert list(queries.REGISTRY) == expected
 
+    # record rather than raise: an import-time caller could swallow it
+    started, opened = [], []
+    real_open = builtins.open
 
-def test_rotation_prefers_churned_entries(monkeypatch):
-    """r10 (VERDICT r9 item 8): entries whose operator modules changed
-    since the last round-close commit rotate in ahead of same-age
-    unchanged entries, so driver rows track code churn, not just row
-    age. Forced-churn check: pretend only operators.sketch changed —
-    every non-pinned sketch-touching entry must land in the window."""
-    import sanef_election_dashboard_etl_spark.queries as q
+    def no_subprocess(*args, **kwargs):
+        started.append(args)
+        raise OSError("no subprocess at import")
 
-    # the module map must unwrap the @query tune-wrapper closure
-    mods = q._entry_modules(q.REGISTRY["dedup_pagerank_centrality"].fn)
-    assert any(m.endswith("operators.dedup") for m in mods)
+    def recording_open(file, *args, **kwargs):
+        opened.append(str(file))
+        return real_open(file, *args, **kwargs)
 
-    sketch_mod = "sanef_election_dashboard_etl_spark.operators.sketch"
-    touching = [n for n in q.REGISTRY if n not in q._PINNED and any(
-        m == sketch_mod for m in q._entry_modules(q.REGISTRY[n].fn))]
-    assert touching, "expected some sketch-backed entries"
-    assert len(touching) <= q._WINDOW_SIZE - len(q._PINNED)
-    try:
-        monkeypatch.setattr(q, "_changed_pkg_modules",
-                            lambda: {sketch_mod})
-        q._reorder_registry()
-        rotated = list(q.REGISTRY)[len(q._PINNED):q._WINDOW_SIZE]
-        # The direct invariant, assertable in EVERY repo state (an
-        # earlier form skipped itself whenever any never-checked entry
-        # existed — r10 review catch): churn shares the bump tier with
-        # age-floor staleness (r11), so no already-covered entry that
-        # is NEITHER churned NOR past the age floor may hold a slot
-        # while a covered churned entry is left out. Never-checked
-        # entries (coverage 0) still outrank both; stale entries (the
-        # r11 burn-down class) legitimately compete with churn.
-        covered = q._driver_coverage()
-        latest, cur = q._driver_age()
-        left_out_churned = [n for n in touching
-                            if n not in rotated and covered.get(n, 0) > 0]
-        unchurned_in = [n for n in rotated
-                        if covered.get(n, 0) > 0 and n not in touching
-                        and cur - latest.get(n, 0) <= q._AGE_FLOOR]
-        assert not (left_out_churned and unchurned_in), (
-            left_out_churned, unchurned_in)
-    finally:
-        monkeypatch.undo()
-        q._reorder_registry()  # restore the real (git-state) ordering
-
-
-def test_rotation_age_floor_drains_stale_rows():
-    """r11 (VERDICT r10 item 3): churn-only priority stalled
-    never-touched entries at r1/r2-era driver rows for nine rounds.
-    The rotation now bumps any entry whose latest row is past
-    _AGE_FLOOR, oldest first — so while more stale entries exist than
-    slots, every slot drains the oldest; once they fit, ALL of them
-    are in the window (no entry's row ages past floor+1 at steady
-    state)."""
-    import sanef_election_dashboard_etl_spark.queries as q
-
-    latest, cur = q._driver_age()
-    window = list(q.REGISTRY)[:q._WINDOW_SIZE]
-    stale = sorted((n for n in q.REGISTRY
-                    if cur - latest.get(n, 0) > q._AGE_FLOOR),
-                   key=lambda n: latest.get(n, 0))
-    capacity = q._WINDOW_SIZE - len(q._PINNED)
-    # the oldest min(len(stale), capacity) stale entries all get a slot
-    must_run = [n for n in stale if n not in q._PINNED][:capacity]
-    left_out = [n for n in must_run if n not in window]
-    assert not left_out, f"stale entries left out of the window: {left_out}"
-
-
-def test_rows_only_window_entries_have_fresh_sibling_anchor():
-    """r11 (VERDICT r10 item 4): a rows-only entry's correctness story
-    leans on its oracle-checked sibling — an anchor whose own driver
-    evidence is nine rounds old anchors nothing. Every rows-only entry
-    in the driver window must have its sibling either fresh (driver
-    row within _AGE_FLOOR rounds) or pulled into the same window."""
-    import sanef_election_dashboard_etl_spark.queries as q
-
-    latest, cur = q._driver_age()
-    window = list(q.REGISTRY)[:q._WINDOW_SIZE]
-    bad = []
-    for n in window:
-        entry = q.REGISTRY[n]
-        if entry.oracle is not None or not entry.sibling:
-            continue
-        s = entry.sibling
-        if s not in window and cur - latest.get(s, 0) > q._AGE_FLOOR:
-            bad.append((n, s, latest.get(s, 0)))
-    assert not bad, f"rows-only window entries with stale anchors: {bad}"
-
-
-def test_rotation_is_deterministic_per_round():
-    # same inputs -> same window (the driver and any re-import must agree)
-    import importlib
-
-    import sanef_election_dashboard_etl_spark.queries as q
-
-    first = list(q.REGISTRY)[:_WINDOW_SIZE]
-    importlib.reload(q)
-    assert list(q.REGISTRY)[:_WINDOW_SIZE] == first
+    monkeypatch.setattr(subprocess, "run", no_subprocess)
+    monkeypatch.setattr(subprocess, "Popen", no_subprocess)
+    monkeypatch.setattr(builtins, "open", recording_open)
+    importlib.reload(queries)
+    monkeypatch.undo()
+    assert list(queries.REGISTRY) == expected
+    assert not started, f"import started subprocesses: {started}"
+    assert not [f for f in opened if "CORRECTNESS_r" in f], opened
 
 
 def test_rows_only_entries_name_sibling():

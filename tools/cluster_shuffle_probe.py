@@ -16,7 +16,7 @@ evaporates on local-cluster was leaning on shared-heap artifacts.
 
 Each mode runs in a SEPARATE subprocess (Spark masters can't be swapped
 in-process); one warm rep then best-of-3 noop-sink executions per query,
-plan built off the clock (bench.py methodology).
+plan built off the clock.
 """
 
 from __future__ import annotations

@@ -31,4 +31,5 @@ SPARK_GRAFT_MASTER='local-cluster[2,4,2048]' SPARK_GRAFT_CPUS=8 \
     python tools/check_oracle.py /root/testdata/sf0.001 | tail -2
 
 echo "== bench =="
-python bench.py --record
+python3 perfbench/run.py --workload election_dashboard --seed 7 --seconds 21
+python3 perfbench/run.py --workload olap_relational --seed 7 --seconds 21

@@ -1,13 +1,13 @@
 """Per-stage time/bytes breakdown for registry queries (guide §1.1).
 
 The shipped session runs with spark.ui.enabled=false, so this tool
-builds its own UI-enabled session (same confs otherwise, bench's
-micro-calibration applied at micro scale) and, after executing each
-query to the noop sink, reads per-stage metrics from the local UI REST
-API (localhost only — no external network). Output: one table per
-query, a row per stage of the LAST timed run, with executor run/CPU
-time, shuffle read/write bytes and task counts — the "which stage is
-the time going to" instrument the optimization guide opens with.
+builds its own UI-enabled session (the shipped confs otherwise) and,
+after executing each query to the noop sink, reads per-stage metrics
+from the local UI REST API (localhost only — no external network).
+Output: one table per query, a row per stage of the LAST timed run,
+with executor run/CPU time, shuffle read/write bytes and task counts —
+the "which stage is the time going to" instrument the optimization
+guide opens with.
 
 Usage: python tools/stage_profile.py <query> [<query> ...]
        [--sf-dir /root/testdata/sf0.1] [--reps 2]
@@ -59,18 +59,6 @@ def main(argv=None):
 
     spark = build_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     spark.sparkContext.setLogLevel("ERROR")
-    # mirror bench.py's micro-scale calibration so stage shapes match
-    # the benched configuration
-    li = os.path.join(args.sf_dir, "lineitem.parquet")
-    lineitem_bytes = (
-        sum(e.stat().st_size for e in os.scandir(li)) if os.path.isdir(li)
-        else os.path.getsize(li))
-    if lineitem_bytes <= (100 << 20):
-        SESS.TUNE_OVERRIDES.update({
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": "4",
-        })
-
     app_id = spark.sparkContext.applicationId
 
     def run(df):

@@ -94,6 +94,11 @@ def main() -> None:
         .master(f"local[{cpus}]")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # recentProgress keeps only this many updates (default 100); room
+        # for every data batch plus a no-data batch after each, so the
+        # per-batch totals never undercount a large --batches
+        .config("spark.sql.streaming.numRecentProgressUpdates",
+                str(max(100, 2 * args.batches)))
         .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
