@@ -939,8 +939,6 @@ def bm25_topk(df: DataFrame, queries: DataFrame, k: int = 10,
     exit; outside a scope it lives until clearCache (the
     index-is-a-table production posture).
     """
-    from pyspark.sql import Window
-
     if mode not in ("index", "scan"):
         # a silent fall-through on a typo ('Scan', 'term-scan') would
         # run the inverted-index plan the caller didn't ask for
@@ -1026,6 +1024,19 @@ def bm25_topk(df: DataFrame, queries: DataFrame, k: int = 10,
     term_set = qterms.select("token").distinct()
     dfreq = (tf.join(F.broadcast(term_set), "token")
                .groupBy("token").agg(F.count(F.lit(1)).alias("df_docs")))
+    return _bm25_score_topk(matched, dfreq, stats, k, k1, b, id_col)
+
+
+def _bm25_score_topk(matched: DataFrame, dfreq: DataFrame,
+                     stats: DataFrame, k: int, k1: float, b: float,
+                     id_col: str) -> DataFrame:
+    """The scoring tail both bm25_topk modes share: `matched` (query_id,
+    token, id, tf, dl) joins the per-term document frequencies `dfreq`
+    (token, df_docs) and the one-row corpus `stats` (total_tokens,
+    n_docs); each (query, doc) pair sums its per-term contributions, and
+    the top `k` per query survive."""
+    from pyspark.sql import Window
+
     scored = (matched
               .join(F.broadcast(dfreq), "token")
               .crossJoin(F.broadcast(stats)))
@@ -1066,8 +1077,6 @@ def _bm25_topk_scan(df: DataFrame, queries: DataFrame, k: int,
     100 TB this is the ad-hoc-retrieval plan (no index to build or
     store); tf/dl/df integers match the index path exactly, so the
     same DuckDB oracle covers both."""
-    from pyspark.sql import Window
-
     toks = F.filter(tokens(F.col(text_col)), lambda x: x != "")
     base = df.select(F.col(id_col), toks.alias("__toks"))
     # dl sums exactly the index path's per-doc tf total (count of
@@ -1110,29 +1119,7 @@ def _bm25_topk_scan(df: DataFrame, queries: DataFrame, k: int,
         matched = scoped_persist(matched, StorageLevel.MEMORY_AND_DISK)
     dfreq = (matched.select("token", id_col).distinct()
              .groupBy("token").agg(F.count(F.lit(1)).alias("df_docs")))
-    scored = (matched
-              .join(F.broadcast(dfreq), "token")
-              .crossJoin(F.broadcast(stats)))
-    avgdl = (F.col("total_tokens").cast("double")
-             / F.col("n_docs").cast("double"))
-    idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df_docs")
-                              + F.lit(0.5))
-                / (F.col("df_docs") + F.lit(0.5)))
-    denom = (F.col("tf") + F.lit(k1)
-             * (F.lit(1.0) - F.lit(b)
-                + F.lit(b) * F.col("dl") / avgdl))
-    contrib = F.round(idf * (F.col("tf") * F.lit(k1 + 1.0)) / denom, 6) \
-        .cast("decimal(38,6)")
-    per_pair = (scored
-                .groupBy("query_id", id_col)
-                .agg((F.round(F.sum(contrib).cast("double"), 4)
-                      + F.lit(0.0)).alias("score")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col).asc())
-    return (per_pair
-            .withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", id_col, "score"))
+    return _bm25_score_topk(matched, dfreq, stats, k, k1, b, id_col)
 
 
 # --------------------------------------------------------------------------

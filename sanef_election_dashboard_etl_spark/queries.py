@@ -40,6 +40,7 @@ from .operators import similarity as S
 from .operators import sketch as SK
 from .operators import temporal as TP
 from .operators import text as T
+from .plans import pipelines as P
 from .session import tune
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -278,12 +279,10 @@ def e2_html_template(spark, sf_dir):
 def e3_e4_recode(spark, sf_dir):
     """E3+E4: cast-to-string + 9-entry dict recode — the province map
     (SANEF_Uploader.py:225-226), unmatched -> NULL."""
-    codes = {"0": "EC", "1": "FS", "2": "GT", "3": "KZN", "4": "MP",
-             "5": "NC", "6": "LIM", "7": "NW", "8": "WC"}
     return _t(spark, sf_dir, "nation").select(
         "n_nationkey",
-        recode_map(F.pmod(F.col("n_nationkey"), F.lit(9)).cast("string"),
-                   codes).alias("province"))
+        recode_map((F.pmod(F.col("n_nationkey"), F.lit(9)) + 1).cast("string"),
+                   P.PROVINCE_CODES).alias("province"))
 
 
 @query("e5_arith", oracle="""
@@ -747,6 +746,26 @@ _PROVINCE_CASE = """
 """
 
 
+def _fixture_munis(spark, sf_dir):
+    """customer shaped as the Munis dim the council pipelines join:
+    c_custkey ≙ MunicipalityID, c_name ≙ the municipality code,
+    c_mktsegment ≙ its name, pmod(c_nationkey, 9) + 1 ≙ the ProvinceID
+    that P.PROVINCE_CODES recodes."""
+    return _t(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("MunicipalityID"),
+        (F.pmod(F.col("c_nationkey"), F.lit(9)) + 1).alias("ProvinceID"),
+        F.col("c_name").alias("Municipality"),
+        F.col("c_mktsegment").alias("MunicipalityName"))
+
+
+def _fixture_winners(orders, hung, *extra):
+    """orders shaped as LED_GIS_CouncilWinners: o_custkey ≙ the
+    municipality and the boolean `hung` ≙ bHung, plus `extra` columns."""
+    return orders.select(F.lit(1091).alias("fklEEID"),
+                         F.col("o_custkey").alias("fklMunicipalityID"),
+                         hung.cast("int").alias("bHung"), *extra)
+
+
 @query("pipe_hung_councils", oracle=f"""
     WITH agg AS (
         SELECT {_PROVINCE_CASE} AS Geography,
@@ -764,20 +783,9 @@ def pipe_hung_councils(spark, sf_dir):
     """FLAGSHIP: the hung_councils pipeline (SANEF_Uploader.py:192-248) over
     fixtures — scan -> broadcast join -> recode -> fused sum/count ->
     stack. orders=council winners, 'O' status=hung, nations%9=provinces."""
-    codes = {"0": "EC", "1": "FS", "2": "GT", "3": "KZN", "4": "MP",
-             "5": "NC", "6": "LIM", "7": "NW", "8": "WC"}
     o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    j = R.dim_join(o, c, o.o_custkey == c.c_custkey).withColumn(
-        "Geography",
-        recode_map(F.pmod(F.col("c_nationkey"), F.lit(9)).cast("string"), codes))
-    agg = R.grouped_sum_count(j, ["Geography"],
-                              (F.col("o_orderstatus") == "O").cast("long"),
-                              "hung", "total")
-    return R.stack_pairs(agg, ["Geography"],
-                         [("Hung", F.col("hung")),
-                          ("Outright Majority", F.col("total") - F.col("hung"))],
-                         "Councils", "Count")
+    return P.hung_councils(_fixture_winners(o, F.col("o_orderstatus") == "O"),
+                           _fixture_munis(spark, sf_dir))
 
 
 @query("pipe_voter_turnout", oracle=f"""
@@ -2197,15 +2205,12 @@ def pipe_councils_won_by_party(spark, sf_dir):
     """councils_won_by_party pipeline (SANEF_Uploader.py:306-360) over
     fixtures: outright-winners scan (bHung=0 ≙ status 'F') -> broadcast dim
     join -> province recode -> 2-key count. Party ≙ order priority class."""
-    codes = {"0": "EC", "1": "FS", "2": "GT", "3": "KZN", "4": "MP",
-             "5": "NC", "6": "LIM", "7": "NW", "8": "WC"}
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    c = _t(spark, sf_dir, "customer")
-    j = R.dim_join(o, c, o.o_custkey == c.c_custkey).withColumn(
-        "Geography",
-        recode_map(F.pmod(F.col("c_nationkey"), F.lit(9)).cast("string"), codes))
-    return (j.groupBy("Geography", F.col("o_orderpriority").alias("Party"))
-            .agg(F.count(F.lit(1)).alias("Count")))
+    o = _t(spark, sf_dir, "orders")
+    cw = _fixture_winners(o, F.col("o_orderstatus") != "F",
+                          F.col("o_orderpriority").alias("fklPartyID"))
+    party = o.select(F.col("o_orderpriority").alias("pklPartyID"),
+                     F.col("o_orderpriority").alias("sPartyName")).distinct()
+    return P.councils_won_by_party(cw, party, _fixture_munis(spark, sf_dir))
 
 
 @query("pipe_list_of_hung_councils", oracle=f"""
@@ -2216,7 +2221,8 @@ def pipe_councils_won_by_party(spark, sf_dir):
     )
     SELECT Geography,
            '<ul>' || string_agg(
-               '<li><a href = #geo:' || c_name || '>' || c_name || ' - '
+               '<li><a href = https://sanef-local-gov.openup.org.za/#geo:'
+                   || c_name || '>' || c_name || ' - '
                    || c_mktsegment || ' </a> </li>', '' ORDER BY c_name)
                   || '</ul>' AS Contents
     FROM hung
@@ -2224,24 +2230,12 @@ def pipe_councils_won_by_party(spark, sf_dir):
 """)
 def pipe_list_of_hung_councils(spark, sf_dir):
     """list_of_hung_councils pipeline (SANEF_Uploader.py:255-299) over
-    fixtures: hung scan -> dim join -> recode -> DISTINCT members ->
-    per-province ordered HTML fold (A10 with explicit ordering)."""
-    codes = {"0": "EC", "1": "FS", "2": "GT", "3": "KZN", "4": "MP",
-             "5": "NC", "6": "LIM", "7": "NW", "8": "WC"}
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
-    c = _t(spark, sf_dir, "customer")
-    members = (R.dim_join(o, c, o.o_custkey == c.c_custkey)
-               .withColumn("Geography",
-                           recode_map(F.pmod(F.col("c_nationkey"), F.lit(9))
-                                      .cast("string"), codes))
-               .select("Geography", "c_name", "c_mktsegment").distinct())
-    li = F.concat(F.lit("<li><a href = #geo:"), F.col("c_name"), F.lit(">"),
-                  F.col("c_name"), F.lit(" - "), F.col("c_mktsegment"),
-                  F.lit(" </a> </li>"))
-    out = R.grouped_ordered_concat(members, "Geography", li,
-                                   F.col("c_name"), "Contents",
-                                   prefix="<ul>", suffix="</ul>")
-    return out
+    fixtures: DISTINCT winners (one row per municipality, as in the
+    reference table) -> hung filter -> dim join -> recode -> per-province
+    ordered HTML fold (A10 with explicit ordering)."""
+    o = _t(spark, sf_dir, "orders")
+    cw = _fixture_winners(o, F.col("o_orderstatus") == "O").distinct()
+    return P.list_of_hung_councils(cw, _fixture_munis(spark, sf_dir))
 
 
 # ==========================================================================
@@ -2632,7 +2626,6 @@ def pipe_ward_votes_by_party(spark, sf_dir):
     explode pipeline. The oracle computes the same result flat — so the
     struct/array construction + explode (E7/R4) is what's actually under
     test."""
-    from .plans.pipelines import ward_votes_by_party
     o = _t(spark, sf_dir, "orders")
     payloads = (o.groupBy(F.col("o_custkey"), F.col("o_orderpriority"))
                 .agg(F.count(F.lit(1)).alias("votes"))
@@ -2643,7 +2636,7 @@ def pipe_ward_votes_by_party(spark, sf_dir):
                 .select(F.struct(
                     F.col("o_custkey").cast("string").alias("WardID"),
                     F.col("results").alias("PartyBallotResults")).alias("payload")))
-    return ward_votes_by_party(payloads)
+    return P.ward_votes_by_party(payloads)
 
 
 @query("pipe_seats_won", oracle="""
@@ -2666,7 +2659,6 @@ def pipe_seats_won(spark, sf_dir):
     null-drop -> explode -> broadcast-lookup -> Ward/PR stack pipeline
     against a customer-derived muni dim; oracle computes the flat
     equivalent."""
-    from .plans.pipelines import seats_won
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     payloads = (o.groupBy("o_custkey", "o_orderpriority")
@@ -2682,7 +2674,7 @@ def pipe_seats_won(spark, sf_dir):
                     F.col("results").alias("PartyResults")).alias("payload")))
     munis = c.select(F.col("c_custkey").cast("int").alias("MunicipalityID"),
                      F.col("c_name").alias("Municipality"))
-    return seats_won(payloads, munis)
+    return P.seats_won(payloads, munis)
 
 
 @query("pipe_ward_votes_by_candidate", oracle=f"""
@@ -2696,7 +2688,6 @@ def pipe_ward_votes_by_candidate(spark, sf_dir):
     """ward_votes_by_candidate pipeline (SANEF_Uploader.py:94-124):
     completed-set semi-join (de-looped J7) -> 'party - candidate' concat
     (E1) -> project. lineitem rows ≙ per-ward candidate rows."""
-    from .plans.pipelines import ward_votes_by_candidate
     l = _t(spark, sf_dir, "lineitem")
     wc = l.select(F.lit(1091).alias("fklEEId"),
                   F.col("l_orderkey").alias("fklWardId"),
@@ -2706,7 +2697,7 @@ def pipe_ward_votes_by_candidate(spark, sf_dir):
                   F.col("l_quantity").cast("long").alias("Votes"))
     completed = j4_anti_join(spark, sf_dir).select(
         F.col("o_orderkey").alias("WardID"))
-    return ward_votes_by_candidate(wc, completed)
+    return P.ward_votes_by_candidate(wc, completed)
 
 
 @query("pipe_pr_votes_by_party", oracle=f"""
@@ -2718,7 +2709,6 @@ def pipe_ward_votes_by_candidate(spark, sf_dir):
 def pipe_pr_votes_by_party(spark, sf_dir):
     """pr_votes_by_party pipeline (SANEF_Uploader.py:155-184): completed
     semi-join -> projection (P2 by-name, not by-ordinal)."""
-    from .plans.pipelines import pr_votes_by_party
     l = _t(spark, sf_dir, "lineitem")
     wr = l.select(F.lit(1091).alias("fklEEId"),
                   F.col("l_orderkey").alias("fklWardId"),
@@ -2727,7 +2717,7 @@ def pipe_pr_votes_by_party(spark, sf_dir):
                   F.col("l_quantity").cast("long").alias("Votes"))
     completed = j4_anti_join(spark, sf_dir).select(
         F.col("o_orderkey").alias("WardID"))
-    return pr_votes_by_party(wr, completed)
+    return P.pr_votes_by_party(wr, completed)
 
 
 @query("pipe_ward_councillor_elected", oracle="""
@@ -2744,7 +2734,6 @@ def pipe_ward_councillor_elected(spark, sf_dir):
     fetched councillor payload -> 'Name - Party' contents -> first-wins
     keyed dedup (A9 with an explicit order, vs the reference's O(n^2)
     membership scan)."""
-    from .plans.pipelines import ward_councillor_elected
     c = _t(spark, sf_dir, "customer")
     payload = (c.groupBy()
                .agg(F.collect_list(F.struct(
@@ -2752,7 +2741,7 @@ def pipe_ward_councillor_elected(spark, sf_dir):
                     .alias("WardID"),
                    F.col("c_name").alias("Name"),
                    F.col("c_mktsegment").alias("PartyName"))).alias("payload")))
-    return ward_councillor_elected(payload)
+    return P.ward_councillor_elected(payload)
 
 
 def _minhash_oracle_sql(k: int = 16, bands: int = 4, seed: int = 42,

@@ -43,8 +43,8 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def get_spark(app_name: str = "sanef-etl-spark", master: str | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "sanef-etl-spark",
+              master: str | None = None) -> SparkSession:
     """Build (or fetch) a tuned SparkSession.
 
     local[$SPARK_GRAFT_CPUS] by default; on a real cluster callers pass
@@ -59,7 +59,6 @@ def get_spark(app_name: str = "sanef-etl-spark", master: str | None = None,
         SparkSession.builder.appName(app_name)
         .master(master or os.environ.get("SPARK_GRAFT_MASTER")
                 or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # saveAsTable targets (bucketed-join tests); static conf, so set at
@@ -88,7 +87,11 @@ def _ship_package(spark: SparkSession) -> None:
     way: the local-cluster[2,4,*] gate failed multimodal_features with
     ModuleNotFoundError on the executor. addPyFile is the cluster-real
     fix (ships the same zip a spark-submit --py-files deployment would)
-    and is a no-op cost in plain local mode."""
+    and is a no-op cost in plain local mode. Each addPyFile also
+    adds a sys.path entry, so a zip already in the context's Python
+    includes is not added again. The check stays in Python: the public
+    `sc.listFiles` costs ~30 ms of py4j calls on a 4-CPU host, and
+    every registry call and pipeline run tunes its session."""
     global _PKG_ZIP
     if _PKG_ZIP is None:
         import shutil
@@ -101,7 +104,9 @@ def _ship_package(spark: SparkSession) -> None:
             stem, "zip", root_dir=os.path.dirname(pkg_dir),
             base_dir=os.path.basename(pkg_dir))
     try:
-        spark.sparkContext.addPyFile(_PKG_ZIP)
+        sc = spark.sparkContext
+        if os.path.basename(_PKG_ZIP) not in sc._python_includes:
+            sc.addPyFile(_PKG_ZIP)
     except Exception:
         # an already-stopped or restricted context must not break session
         # construction; plain local mode never needed the file anyway

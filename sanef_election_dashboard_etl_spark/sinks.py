@@ -1,10 +1,11 @@
 """Sinks (SURVEY.md §2.1 S8/S9).
 
-S8: the reference writes one timestamped CSV (SANEF_Uploader.py:51-55).
-Engine: distributed write + optional single-file collapse — results are
-dashboard-sized (<= tens of k rows) by construction, so coalesce(1) is a
-deliberate, documented choice, not an accident. Large extracts use the
-partitioned writer.
+S8: the reference writes one timestamped CSV with pandas `to_csv`
+(SANEF_Uploader.py:51-55). Dashboard results are small (at most tens of
+thousands of rows) by construction, so `write_csv_single` collects the
+result to the driver in one action and writes it with the stdlib CSV
+writer: the same bytes as `to_csv(index=False)`, with no Spark write job
+and no temporary directory. Large extracts use the partitioned writer.
 
 S9: the dashboard upload (multipart POST, overwrite semantics, :57-64) is
 a driver-side adapter *outside* the Spark plan; in streaming mode it is the
@@ -12,9 +13,8 @@ foreachBatch body (streaming/)."""
 
 from __future__ import annotations
 
-import glob
+import csv
 import os
-import shutil
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
@@ -25,35 +25,20 @@ def timestamped_name(prefix: str) -> str:
     return f"{prefix}{datetime.now(timezone.utc).strftime('%d%m%Y-%H%M')}.csv"
 
 
-def _csv_header_field(name: str) -> str:
-    # mirror Spark's CSV quoting for the driver-written header line
-    if any(c in name for c in (',', '"', '\n', '\r')):
-        return '"' + name.replace('"', '""') + '"'
-    return name
-
-
 def write_csv_single(df: DataFrame, path: str) -> str:
-    """Small-result CSV sink: PARALLEL headerless write (every core
-    serializes its partitions), then a driver-side ordered concat of the
-    part files under a single header line — same single-file contract as
-    the reference's to_csv (SANEF_Uploader.py:55), without funnelling the
-    serialization through one task (the old coalesce(1) was ~3x slower
-    at 50k rows). Part files are concatenated in name order, which is
-    partition order, so a sorted frame stays globally sorted."""
-    # absolutize against PYTHON's cwd — Spark would otherwise resolve a
-    # relative path against the JVM's startup cwd, which can differ
-    path = os.path.abspath(path)
-    tmp = path + ".spark-tmp"
-    df.write.option("header", False).mode("overwrite").csv(tmp)
-    parts = sorted(glob.glob(os.path.join(tmp, "part-*.csv")))
+    """Small-result CSV sink with the reference's single-file contract
+    (SANEF_Uploader.py:55: `to_csv(index=False)`). One action,
+    `toArrow()`, collects the result in partition order, so a sorted
+    frame stays sorted. The stdlib writer then produces pandas' quoting:
+    QUOTE_MINIMAL, doubled quotes, NULL as an empty field. Values are
+    written in their Python text form, as pandas writes them. Returns
+    `path`."""
+    table = df.toArrow()
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    header = ",".join(_csv_header_field(c) for c in df.columns) + "\n"
-    with open(path, "wb") as out:
-        out.write(header.encode("utf-8"))
-        for part in parts:
-            with open(part, "rb") as fh:
-                shutil.copyfileobj(fh, out, 1 << 20)
-    shutil.rmtree(tmp)
+    with open(path, "w", newline="", encoding="utf-8") as fh:
+        out = csv.writer(fh, lineterminator="\n")
+        out.writerow(table.column_names)
+        out.writerows(zip(*(col.to_pylist() for col in table.columns)))
     return path
 
 
@@ -151,8 +136,8 @@ def write_jsonl(df, path: str, n_files: int | None = None,
     """Export as JSONL (one JSON object per line) — the training-data
     interchange format consumers (tokenizer pipelines, data loaders)
     read directly. A plain distributed `.json()` write: every partition
-    streams its own file, no driver funnel (the CSV single-file concat
-    is a dashboard-upload contract; training export wants many files).
+    streams its own file, no driver funnel (the single-file CSV is a
+    dashboard-upload contract; training export wants many files).
     `n_files` round-robin-repartitions for even file sizes (one narrow
     exchange — use it when upstream partitioning is skewed);
     `compression='gzip'` trades splittability for bytes, so prefer it

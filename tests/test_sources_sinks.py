@@ -59,8 +59,8 @@ def test_write_csv_single(spark, tmp_path):
 
 
 def test_write_csv_single_parallel_preserves_sort_order(spark, tmp_path):
-    """The parallel writer concatenates part files in partition order, so
-    a sorted frame must land globally sorted under one header line."""
+    """The sink collects in partition order, so a sorted multi-partition
+    frame must land globally sorted under one header line."""
     df = (spark.range(0, 1000)
           .selectExpr("id", "cast(id % 7 as string) as grp")
           .orderBy("id"))
@@ -71,6 +71,33 @@ def test_write_csv_single_parallel_preserves_sort_order(spark, tmp_path):
     assert rows_[0] == ["id", "grp"]
     ids = [int(r[0]) for r in rows_[1:]]
     assert ids == sorted(ids) and len(ids) == 1000
+
+
+def test_write_csv_single_matches_pandas_to_csv(spark, tmp_path):
+    """Same bytes as the reference's `to_csv(index=False)`: leading and
+    trailing spaces kept, embedded quotes doubled, commas and newlines
+    quoted, NULL as an empty field; and the file reads back unchanged."""
+    import pandas as pd
+
+    texts = ["  padded ", 'say "hi"', "a,b", "line1\nline2", "", None]
+    data = [(t, i) for i, t in enumerate(texts)]
+    df = spark.createDataFrame(data, "s string, n bigint")
+    path = str(tmp_path / "quoting.csv")
+    assert sinks.write_csv_single(df, path) == path
+    want = pd.DataFrame(data, columns=["s", "n"]).to_csv(index=False)
+    with open(path, "rb") as fh:
+        assert fh.read() == want.encode("utf-8")
+    with open(path, newline="") as fh:
+        back = list(csv.reader(fh))
+    assert back == [["s", "n"]] + [[t or "", str(i)] for t, i in data]
+
+
+def test_write_csv_single_empty_frame_writes_header_only(spark, tmp_path):
+    df = spark.createDataFrame([], "Geography string, Count bigint")
+    path = str(tmp_path / "empty.csv")
+    sinks.write_csv_single(df, path)
+    with open(path, "rb") as fh:
+        assert fh.read() == b"Geography,Count\n"
 
 
 def test_write_csv_partitioned(spark, tmp_path):

@@ -33,3 +33,6 @@ SPARK_GRAFT_MASTER='local-cluster[2,4,2048]' SPARK_GRAFT_CPUS=8 \
 echo "== bench =="
 python3 perfbench/run.py --workload election_dashboard --seed 7 --seconds 21
 python3 perfbench/run.py --workload olap_relational --seed 7 --seconds 21
+
+echo "== perfbench tests (the package names it wraps must still exist) =="
+python -m pytest perfbench/tests -q
