@@ -9,6 +9,7 @@ filters into the parquet scan, so "load" costs nothing until an action runs.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -110,26 +111,29 @@ def spread_cpu_scan(df: DataFrame, parallelism: int | None = None,
     return df.repartition(want)
 
 
-# per-session memo for the input-size estimators (VERDICT r11 item 6):
-# spread_cpu_scan / cache.persist_if_heavy stat every input file on the
-# driver PER CALL — O(files) syscalls each time the same table feeds
-# another operator. Parquet part files are write-once, so a path-set's
-# total size never changes within a session; memoize it.
-_INPUT_BYTES_MEMO: dict[tuple[str, ...], int | None] = {}
-
-
 def input_bytes(files: list[str]) -> int | None:
     """Total byte size of a scan's input files, memoized per path-set.
 
     None = not locally statable (remote URI, or a file vanished):
     callers apply their own conservative default (spread_cpu_scan
     trusts the store's split planning; persist_if_heavy assumes
-    heavy). The negative result memoizes too — repeated calls on a
-    remote table must not re-walk the path list."""
-    key = tuple(files)
-    if key in _INPUT_BYTES_MEMO:
-        return _INPUT_BYTES_MEMO[key]
-    total: int | None = 0
+    heavy). A remote path-set's None memoizes too — repeated calls on a
+    remote table must not re-walk the path list — but a vanished file's
+    does not: it may be back on the next call."""
+    try:
+        return _input_bytes(tuple(files))
+    except OSError:
+        return None
+
+
+# spread_cpu_scan / cache.persist_if_heavy stat every input file on the
+# driver PER CALL — O(files) syscalls each time the same table feeds
+# another operator (VERDICT r11 item 6). Parquet part files are
+# write-once, so a path-set's total size is memoized; lru_cache keeps no
+# result of a call that raised, so an OSError is not.
+@functools.lru_cache(maxsize=1024)
+def _input_bytes(files: tuple[str, ...]) -> int | None:
+    total = 0
     for uri in files:
         path = uri
         if path.startswith("file:"):
@@ -137,14 +141,8 @@ def input_bytes(files: list[str]) -> int | None:
             while path.startswith("//"):
                 path = path[1:]
         elif "://" in path:
-            total = None  # remote store
-            break
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            total = None
-            break
-    _INPUT_BYTES_MEMO[key] = total
+            return None  # remote store
+        total += os.path.getsize(path)
     return total
 
 

@@ -195,3 +195,21 @@ def test_persist_if_heavy_gates_on_source_size(spark, tmp_path):
         persist_if_heavy(lit).count()
         assert scope, "non-file-backed plan must persist unconditionally"
     assert _n_persisted(spark) == base
+
+
+def test_input_bytes_restats_a_file_that_comes_back(tmp_path):
+    """A vanished input file gives None without memoizing it, so the
+    next call stats the file again once it is back; a remote path-set's
+    None is memoized (no re-walk)."""
+    from sanef_election_dashboard_etl_spark.catalog import _input_bytes, input_bytes
+
+    part = tmp_path / "part-0.parquet"
+    files = [f"file://{part}"]
+    assert input_bytes(files) is None
+    part.write_bytes(b"x" * 123)
+    assert input_bytes(files) == 123
+
+    remote = ["s3a://bucket/part-0.parquet"]
+    hits = _input_bytes.cache_info().hits
+    assert input_bytes(remote) is None and input_bytes(remote) is None
+    assert _input_bytes.cache_info().hits == hits + 1

@@ -1,9 +1,18 @@
 """Session construction: `tune` may run on every entry point, so it must
-leave the session as it found it after the first call."""
+leave the session as it found it after the first call; `get_spark` maps a
+class-data-sharing (CDS) archive when it launches the JVM itself."""
 
+import json
+import os
+import subprocess
 import sys
 
+import pytest
+
+from sanef_election_dashboard_etl_spark import session
 from sanef_election_dashboard_etl_spark.session import tune
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_repeated_tune_ships_the_package_once(spark):
@@ -13,3 +22,106 @@ def test_repeated_tune_ships_the_package_once(spark):
     for _ in range(5):
         tune(spark)
     assert (len(sys.path), len(sc._python_includes)) == before
+
+
+@pytest.fixture()
+def cds_dir(tmp_path, monkeypatch):
+    """CDS_DIR redirected to a fresh dir, an empty conf dir in effect;
+    the module state and SPARK_CONF_DIR are restored afterwards."""
+    (tmp_path / "spark-conf").mkdir()
+    monkeypatch.setattr(session, "CDS_DIR", str(tmp_path / "cds"))
+    monkeypatch.setattr(session, "cds", session.cds)
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path / "spark-conf"))
+    return tmp_path / "cds"
+
+
+def test_cds_key_ignores_jvm_options(cds_dir, monkeypatch):
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS",
+                       '--driver-java-options "-Djava.io.tmpdir=/run-1" pyspark-shell')
+    first = session._cds_archive()
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS",
+                       '--driver-java-options "-Djava.io.tmpdir=/run-2 -Xss4m" pyspark-shell')
+    assert first is not None and session._cds_archive() == first
+
+
+def test_cds_key_follows_the_jars(cds_dir, tmp_path, monkeypatch):
+    jars = tmp_path / "spark-home" / "jars"
+    jars.mkdir(parents=True)
+    jar = jars / "spark-core.jar"
+    jar.write_bytes(b"PK" * 100)
+    monkeypatch.setenv("SPARK_HOME", str(jars.parent))
+    keys = [session._cds_archive()]
+    os.utime(jar, ns=(10**18, 10**18))
+    keys.append(session._cds_archive())
+    jar.write_bytes(b"PK" * 101)
+    os.utime(jar, ns=(10**18, 10**18))
+    keys.append(session._cds_archive())
+    assert None not in keys and len(set(keys)) == 3
+
+
+def _driver(cds_dir, conf_dir, code: str = "") -> dict:
+    """Run a fresh driver process against `cds_dir`; its report."""
+    script = "\n".join([
+        "import json, os",
+        "from sanef_election_dashboard_etl_spark import session",
+        f"session.CDS_DIR = {str(cds_dir)!r}",
+        "spark = session.get_spark('cds-test', master='local[1]')",
+        "assert spark.range(3).count() == 3",
+        "report = {'cds': session.cds, 'conf_dir': os.environ['SPARK_CONF_DIR']}",
+        code,
+        "print(json.dumps(report))",
+    ])
+    env = {k: v for k, v in os.environ.items()
+           if k not in (*session._CLASSPATH_ENV, "PYSPARK_SUBMIT_ARGS", "SPARK_GRAFT_MASTER")}
+    env.update(SPARK_CONF_DIR=str(conf_dir), SPARK_GRAFT_CPUS="1",
+               SPARK_GRAFT_DRIVER_MEM="1g", PYTHONPATH=ROOT)
+    run = subprocess.run([sys.executable, "-c", script], env=env, cwd=cds_dir.parent,
+                         capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-3000:]
+    return json.loads(run.stdout.strip().splitlines()[-1])
+
+
+@pytest.fixture(scope="module")
+def built_cds(tmp_path_factory):
+    """Two fresh drivers in sequence over an empty CDS_DIR: the first
+    misses and builds the archive before it exits, the second maps it."""
+    tmp = tmp_path_factory.mktemp("cds-built")
+    (tmp / "spark-conf").mkdir()
+    ship = ("import zipfile; report['zip'] = session._PKG_ZIP; "
+            "report['pycache'] = any('__pycache__' in n for n in "
+            "zipfile.ZipFile(session._PKG_ZIP).namelist())")
+    return tmp, [_driver(tmp / "cds", tmp / "spark-conf", ship) for _ in range(2)]
+
+
+def test_cds_first_driver_builds_and_second_maps(built_cds):
+    tmp, reports = built_cds
+    assert [r["cds"] for r in reports] == ["miss", "hit"]
+    assert len(list((tmp / "cds").glob("*.jsa"))) == 1
+    # no lock, dump temp file or build dir is left behind
+    assert sorted(p.name for p in (tmp / "cds").iterdir()
+                  if not p.name.endswith((".jsa", ".jsa.log"))) == ["conf"]
+    # the shipped package zip has no bytecode and is gone at exit
+    assert not any(r["pycache"] or os.path.exists(r["zip"]) for r in reports)
+
+
+def test_cds_truncated_archive_is_deleted_and_start_retried(built_cds):
+    tmp, _ = built_cds
+    (archive,) = (tmp / "cds").glob("*.jsa")
+    archive.chmod(0o644)
+    with open(archive, "r+b") as fh:
+        fh.truncate(archive.stat().st_size // 2)
+    # a build in progress elsewhere: this driver must not rebuild
+    (tmp / "cds" / f"{archive.name}.lock").touch()
+    report = _driver(tmp / "cds", tmp / "spark-conf")
+    assert report["cds"] == "miss"
+    assert not archive.exists()
+
+
+def test_cds_off_when_the_conf_dir_holds_config(tmp_path):
+    conf = tmp_path / "spark-conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("spark.ui.showConsoleProgress false\n")
+    (tmp_path / "cds").mkdir()
+    report = _driver(tmp_path / "cds", conf)
+    assert report == {"cds": "off", "conf_dir": str(conf)}
+    assert not list((tmp_path / "cds").iterdir())

@@ -12,6 +12,22 @@ fi
 echo "== pytest =="
 python -m pytest tests/ -q
 
+echo "== CDS archive: two fresh drivers, the second must map it =="
+for n in 1 2; do
+    state=$(python -c '
+import time
+t0 = time.perf_counter()
+from sanef_election_dashboard_etl_spark import session
+session.get_spark("cds-check").range(1).count()
+print(f"cds-check {session.cds} setup_s={time.perf_counter() - t0:.1f}")
+' 2>/dev/null)
+    echo "$state"
+done
+case "$state" in
+    "cds-check hit "*) ;;
+    *) echo "FAIL: the second driver did not map the CDS archive"; exit 1 ;;
+esac
+
 echo "== oracle gate sf0.001 =="
 python tools/check_oracle.py /root/testdata/sf0.001 | tail -2
 echo "== oracle gate sf0.01 (driver scale) =="
