@@ -54,6 +54,13 @@ _RUNTIME_CONF = {
 }
 
 
+# Python worker daemon that skips re-reading unchanged zip archives on
+# every task (see its docstring); its directory holds only that module
+WORKER_DAEMON = "sanef_worker_daemon"
+WORKER_DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                 "_worker_daemon")
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -67,7 +74,8 @@ def get_spark(app_name: str = "sanef-etl-spark",
     overrides from the environment — e.g. `local-cluster[2,4,1024]`
     spawns REAL worker JVMs (separate heaps, real serialization, real
     broadcasts) so the gates can prove no query leans on single-JVM
-    shared state; see tools/full_check.sh and SCALE.md.
+    shared state; see tools/full_check.sh and SCALE.md. With a local or
+    local-cluster master, Python workers start through `WORKER_DAEMON`.
     """
     cpus = default_parallelism()
     conf = {
@@ -82,6 +90,12 @@ def get_spark(app_name: str = "sanef-etl-spark",
                                                   "/tmp/spark-warehouse"),
         **_RUNTIME_CONF,
     }
+    if conf["spark.master"] == "local" or conf["spark.master"].startswith(
+            ("local[", "local-cluster[")):
+        # executors on the driver's filesystem can start the worker daemon
+        # from this checkout; elsewhere the stock daemon runs
+        conf["spark.python.daemon.module"] = WORKER_DAEMON
+        conf["spark.executorEnv.PYTHONPATH"] = WORKER_DAEMON_DIR
     spark = _launch(conf)
     _ship_package(spark)
     return spark

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from .. import catalog
+
 
 def read_csv_dim(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """S1: header CSV with explicit schema (no inference pass — a full
@@ -21,7 +23,9 @@ def read_csv_dim(spark: SparkSession, path: str, schema: StructType) -> DataFram
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Parquet with its schema inferred once per session
+    (`catalog.read_parquet`)."""
+    return catalog.read_parquet(spark, path)
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: StructType,

@@ -4,8 +4,9 @@ The reference fetches one JSON document per ward/municipality with an
 asyncio fan-out on the driver (SANEF_Uploader.py:38-48, :443, :573). The
 engine turns that into *executor* parallelism: a DataFrame of request
 params is partitioned across the cluster and each partition's rows are
-fetched inside `mapInPandas` (one HTTP session per partition, Arrow-batched
-in/out), then parsed with an explicit `from_json` schema — never schemaless
+fetched inside `mapInPandas` (Arrow-batched in/out; the fetcher runs once
+per URL, and the default one opens a new `urllib` connection for each),
+then parsed with an explicit `from_json` schema — never schemaless
 duck-typing (:78-84).
 
 The fetcher is injectable so tests (and the offline fixtures) substitute a
@@ -30,8 +31,9 @@ Fetcher = Callable[[str], str]
 
 
 def _default_fetcher(url: str) -> str:
-    """Network fetcher — executor-side, one session per partition would be
-    held in `fetch_json`'s closure; kept import-light (stdlib only)."""
+    """Network fetcher, run on executors: every call opens its own
+    `urllib` connection (nothing is pooled or kept alive between URLs);
+    stdlib only."""
     import urllib.request
 
     with urllib.request.urlopen(url, timeout=30) as resp:  # noqa: S310

@@ -213,3 +213,16 @@ def test_input_bytes_restats_a_file_that_comes_back(tmp_path):
     hits = _input_bytes.cache_info().hits
     assert input_bytes(remote) is None and input_bytes(remote) is None
     assert _input_bytes.cache_info().hits == hits + 1
+
+
+def test_input_bytes_follows_a_file_rewritten_in_place(spark, tmp_path):
+    """A parquet file rewritten at the same path is sized again."""
+    from sanef_election_dashboard_etl_spark.catalog import input_bytes
+
+    path = tmp_path / "t.parquet"
+    spark.range(10).toPandas().to_parquet(path)
+    files = spark.read.parquet(str(path)).inputFiles()
+    assert input_bytes(files) == path.stat().st_size
+    spark.range(5000).toPandas().to_parquet(path)
+    assert spark.read.parquet(str(path)).inputFiles() == files
+    assert input_bytes(files) == path.stat().st_size

@@ -1,6 +1,7 @@
 """Session construction: `tune` may run on every entry point, so it must
 leave the session as it found it after the first call; `get_spark` maps a
-class-data-sharing (CDS) archive when it launches the JVM itself."""
+class-data-sharing (CDS) archive when it launches the JVM itself, and
+starts Python workers through the worker daemon on local masters."""
 
 import json
 import os
@@ -125,3 +126,88 @@ def test_cds_off_when_the_conf_dir_holds_config(tmp_path):
     report = _driver(tmp_path / "cds", conf)
     assert report == {"cds": "off", "conf_dir": str(conf)}
     assert not list((tmp_path / "cds").iterdir())
+
+
+def _worker_daemon():
+    """The worker daemon module, loaded from its file (it is not part of
+    the package's import tree)."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "sanef_worker_daemon",
+        os.path.join(session.WORKER_DAEMON_DIR, "sanef_worker_daemon.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _write_zip(path, names):
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as zf:
+        for n in names:
+            zf.writestr(n, "x = 1\n")
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13),
+                    reason="3.13 reads zip archives lazily; nothing is patched")
+def test_worker_daemon_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    import zipimport
+
+    daemon = _worker_daemon()
+    archive = tmp_path / "lib.zip"
+    _write_zip(archive, ["a.py"])
+    first = zipimport.zipimporter(str(archive))
+    files = first._files
+    # importers that exist when the daemon starts are not read again
+    monkeypatch.setitem(sys.path_importer_cache, str(archive), first)
+    daemon.remember_loaded()
+    second = zipimport.zipimporter(str(archive))
+    for importer in (first, second, first):
+        daemon.invalidate_caches(importer)
+        assert importer._files is files
+    _write_zip(archive, ["a.py", "b.py"])
+    os.utime(archive, ns=(10**18, 10**18))
+    daemon.invalidate_caches(second)
+    assert second._files is not files and "b.py" in second._files
+    daemon.invalidate_caches(first)
+    assert first._files is second._files
+
+
+def test_worker_daemon_keeps_pyspark_zip_read_across_tasks(spark):
+    """The second Python task's `invalidate_caches()` (pyspark's worker
+    also calls it before every task) leaves the directory the worker's
+    pyspark.zip importers hold untouched."""
+    def probe(_):
+        import importlib
+        import sys
+        import zipimport
+
+        zips = [i for i in sys.path_importer_cache.values()
+                if isinstance(i, zipimport.zipimporter)
+                and i.archive.endswith("pyspark.zip")]
+        before = [i._files for i in zips]
+        importlib.invalidate_caches()
+        yield len(zips), all(i._files is f for i, f in zip(zips, before))
+
+    sc = spark.sparkContext
+    assert sc.getConf().get("spark.python.daemon.module") == session.WORKER_DAEMON
+    sc.parallelize([0], 1).mapPartitions(probe).collect()
+    ((n, kept),) = sc.parallelize([0], 1).mapPartitions(probe).collect()
+    assert n > 0 and kept
+
+
+def test_worker_daemon_dir_exposes_no_package(tmp_path):
+    """Workers get the daemon dir on their PYTHONPATH: it must not make
+    the package importable, or a missing addPyFile would go unnoticed."""
+    assert sorted(n for n in os.listdir(session.WORKER_DAEMON_DIR)
+                  if n != "__pycache__") == ["sanef_worker_daemon.py"]
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYTHONPATH"] = session.WORKER_DAEMON_DIR
+
+    def imports(module):
+        return subprocess.run([sys.executable, "-c", f"import {module}"], env=env,
+                              cwd=tmp_path, capture_output=True).returncode == 0
+
+    assert imports(session.WORKER_DAEMON)
+    assert not imports("sanef_election_dashboard_etl_spark")

@@ -469,3 +469,44 @@ def test_values_df_matches_createdataframe_and_plans_local(spark):
         .executedPlan().toString()
     assert "LocalTableScan" in plan
     assert "ExistingRDD" not in plan
+
+
+def test_parquet_schema_cache_rereads_a_rewritten_table(spark, tmp_path):
+    """A repeated read takes the session's cached schema and gives the
+    inferred read's schema and rows; a table rewritten at the same path
+    with a new schema is inferred again."""
+    from sanef_election_dashboard_etl_spark import catalog
+    from sanef_election_dashboard_etl_spark.sources.files import read_parquet
+
+    path = str(tmp_path / "t.parquet")
+    (spark.range(20).selectExpr("id", "cast(id AS string) AS s", "id % 3 AS k")
+     .write.partitionBy("k").parquet(path))
+    inferred = read_parquet(spark, path)
+    assert catalog._SCHEMAS[spark][os.path.realpath(path)][2] == inferred.schema
+    cached = read_parquet(spark, path)
+    assert cached.schema == inferred.schema == spark.read.parquet(path).schema
+    assert rows(cached) == rows(spark.read.parquet(path))
+    # each hit is a fresh reader, so a self-join resolves both sides
+    assert cached.alias("a").join(read_parquet(spark, path).alias("b"), "id").count() == 20
+
+    spark.range(5).selectExpr("id", "id * 1.5 AS x").write.mode("overwrite").parquet(path)
+    again = read_parquet(spark, path)
+    assert again.columns == ["id", "x"]
+    assert rows(again) == rows(spark.read.parquet(path))
+
+
+def test_parquet_schema_cache_follows_inference_confs(spark, tmp_path):
+    import pandas as pd
+
+    from sanef_election_dashboard_etl_spark.catalog import read_parquet
+
+    path = str(tmp_path / "b.parquet")
+    pd.DataFrame({"b": [b"x", b"yz"]}).to_parquet(path)
+    key = "spark.sql.parquet.binaryAsString"
+    assert dict(read_parquet(spark, path).dtypes)["b"] == "binary"
+    spark.conf.set(key, "true")
+    try:
+        assert dict(read_parquet(spark, path).dtypes)["b"] == "string"
+    finally:
+        spark.conf.unset(key)
+    assert dict(read_parquet(spark, path).dtypes)["b"] == "binary"

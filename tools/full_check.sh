@@ -28,6 +28,22 @@ case "$state" in
     *) echo "FAIL: the second driver did not map the CDS archive"; exit 1 ;;
 esac
 
+echo "== Python worker daemon: a fresh session's worker must run its zip check =="
+if ! python -c '
+import sys
+from sanef_election_dashboard_etl_spark import session
+def where(_):
+    import sys, zipimport
+    yield tuple(sys.version_info[:2]), zipimport.zipimporter.invalidate_caches.__code__.co_filename
+sc = session.get_spark("daemon-check").sparkContext
+((ver, src),) = sc.parallelize([0], 1).mapPartitions(where).collect()
+print(f"daemon-check python {ver[0]}.{ver[1]}: invalidate_caches from {src}")
+sys.exit(0 if ver >= (3, 13) or src.endswith("/sanef_worker_daemon.py") else 1)
+' 2>/dev/null; then
+    echo "FAIL: the worker's zipimporter.invalidate_caches is not the daemon's"
+    exit 1
+fi
+
 echo "== oracle gate sf0.001 =="
 python tools/check_oracle.py /root/testdata/sf0.001 | tail -2
 echo "== oracle gate sf0.01 (driver scale) =="
