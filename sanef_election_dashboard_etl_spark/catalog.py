@@ -9,7 +9,6 @@ filters into the parquet scan, so "load" costs nothing until an action runs.
 
 from __future__ import annotations
 
-import functools
 import os
 import stat
 import weakref
@@ -183,30 +182,19 @@ def spread_cpu_scan(df: DataFrame, parallelism: int | None = None,
 
 
 def input_bytes(files: list[str]) -> int | None:
-    """Total byte size of a scan's input files, memoized on their stamps.
+    """Total byte size of a scan's input files, statted on every call.
 
-    None = not locally statable (remote URI, or a file vanished):
+    None = not locally statable (a remote URI, or a file vanished):
     callers apply their own conservative default (spread_cpu_scan
     trusts the store's split planning; persist_if_heavy assumes
-    heavy). A remote path-set's None memoizes too — repeated calls on a
-    remote table must not re-walk the path list — but a vanished file's
-    does not: it may be back on the next call."""
+    heavy). A path-set with a remote URI is answered without a stat."""
     paths = [_local_path(f) for f in files]
+    if None in paths:
+        return None
     try:
-        stamps = None if None in paths else tuple(_stamps(p) for p in paths)
-        return _input_bytes(tuple(files), stamps)
+        return sum(os.stat(p).st_size for p in paths)
     except OSError:
         return None
-
-
-# The memo key carries every file's stamp, so a file rewritten in place at
-# the same path is sized again; lru_cache keeps no result of a call that
-# raised, so a vanished file's OSError is not memoized.
-@functools.lru_cache(maxsize=1024)
-def _input_bytes(files: tuple[str, ...], stamps: tuple | None) -> int | None:
-    if stamps is None:
-        return None  # remote store
-    return sum(s[0][1] for s in stamps)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

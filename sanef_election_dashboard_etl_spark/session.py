@@ -34,14 +34,20 @@ from pyspark import SparkContext
 from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
+
+def default_parallelism() -> int:
+    """`SPARK_GRAFT_CPUS`, else the CPUs this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
 # SQL confs that are runtime-settable; applied both at build time and by
 # `tune()` onto sessions we did not create (the driver passes us its own).
 # Includes shuffle.partitions: a vanilla external session otherwise runs
 # every registry query with Spark's default 200 — observed as 200-task
 # stages in driver_sim before this was set here.
 _RUNTIME_CONF = {
-    "spark.sql.shuffle.partitions": str(int(os.environ.get(
-        "SPARK_GRAFT_CPUS", "32"))),
+    "spark.sql.shuffle.partitions": str(default_parallelism()),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -61,15 +67,11 @@ WORKER_DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                  "_worker_daemon")
 
 
-def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
 def get_spark(app_name: str = "sanef-etl-spark",
               master: str | None = None) -> SparkSession:
     """Build (or fetch) a tuned SparkSession.
 
-    local[$SPARK_GRAFT_CPUS] by default; on a real cluster callers pass
+    local[default_parallelism()] by default; on a real cluster callers pass
     their own master and the same SQL confs apply. `SPARK_GRAFT_MASTER`
     overrides from the environment — e.g. `local-cluster[2,4,1024]`
     spawns REAL worker JVMs (separate heaps, real serialization, real
@@ -88,6 +90,15 @@ def get_spark(app_name: str = "sanef-etl-spark",
         # build — keep managed tables out of the repo working dir
         "spark.sql.warehouse.dir": os.environ.get("SPARK_GRAFT_WAREHOUSE",
                                                   "/tmp/spark-warehouse"),
+        # Compiled generated classes live in a Guava cache of this many
+        # entries (static conf, Spark's default 100), split over 4
+        # segments of ~25: a working set near 100 classes evicts its own
+        # hot entries, so every warm query recompiles, and HotSpot profiles
+        # and JIT-compiles each new class from zero. Measured on a 4-CPU
+        # host: perfbench's olap_relational compiles 98 classes on its
+        # first pass and 51-52 again on every later one; election_dashboard
+        # 103, then 54. 1000 (4 x 250) holds ~10x that working set.
+        "spark.sql.codegen.cache.maxEntries": "1000",
         **_RUNTIME_CONF,
     }
     if conf["spark.master"] == "local" or conf["spark.master"].startswith(
@@ -337,7 +348,9 @@ def tune(spark: SparkSession) -> SparkSession:
 
     Idempotent and cheap; every driver-facing entry point calls this so
     correctness (UTC epochs) and plan quality (AQE, broadcast) do not depend
-    on who built the session.
+    on who built the session. Static confs cannot be set on a running
+    session, so one this package did not launch keeps Spark's defaults
+    for them, among them the codegen class cache size `get_spark` sets.
     """
     for k, v in _RUNTIME_CONF.items():
         spark.conf.set(k, v)

@@ -4,6 +4,8 @@ increase in the context's persistent RDDs — while out-of-scope
 behavior (persist until clearCache, the index-reuse architecture)
 is unchanged."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -197,11 +199,11 @@ def test_persist_if_heavy_gates_on_source_size(spark, tmp_path):
     assert _n_persisted(spark) == base
 
 
-def test_input_bytes_restats_a_file_that_comes_back(tmp_path):
-    """A vanished input file gives None without memoizing it, so the
-    next call stats the file again once it is back; a remote path-set's
-    None is memoized (no re-walk)."""
-    from sanef_election_dashboard_etl_spark.catalog import _input_bytes, input_bytes
+def test_input_bytes_restats_a_file_that_comes_back(tmp_path, monkeypatch):
+    """A vanished input file gives None, and the next call stats the
+    file again once it is back; a path-set with a remote URI gives None
+    without statting anything."""
+    from sanef_election_dashboard_etl_spark.catalog import input_bytes
 
     part = tmp_path / "part-0.parquet"
     files = [f"file://{part}"]
@@ -209,10 +211,12 @@ def test_input_bytes_restats_a_file_that_comes_back(tmp_path):
     part.write_bytes(b"x" * 123)
     assert input_bytes(files) == 123
 
-    remote = ["s3a://bucket/part-0.parquet"]
-    hits = _input_bytes.cache_info().hits
-    assert input_bytes(remote) is None and input_bytes(remote) is None
-    assert _input_bytes.cache_info().hits == hits + 1
+    def no_stat(*args, **kwargs):
+        raise AssertionError("a remote path-set was statted")
+
+    monkeypatch.setattr(os, "stat", no_stat)
+    assert input_bytes(["s3a://bucket/part-0.parquet"]) is None
+    assert input_bytes([*files, "s3a://bucket/part-1.parquet"]) is None
 
 
 def test_input_bytes_follows_a_file_rewritten_in_place(spark, tmp_path):

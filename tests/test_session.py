@@ -1,7 +1,8 @@
 """Session construction: `tune` may run on every entry point, so it must
 leave the session as it found it after the first call; `get_spark` maps a
-class-data-sharing (CDS) archive when it launches the JVM itself, and
-starts Python workers through the worker daemon on local masters."""
+class-data-sharing (CDS) archive when it launches the JVM itself, sizes
+the codegen class cache, and starts Python workers through the worker
+daemon on local masters."""
 
 import json
 import os
@@ -23,6 +24,44 @@ def test_repeated_tune_ships_the_package_once(spark):
     for _ in range(5):
         tune(spark)
     assert (len(sys.path), len(sc._python_includes)) == before
+
+
+def test_warm_queries_compile_no_generated_code(spark):
+    """More distinct generated classes than Spark's stock codegen cache
+    (100 entries in 4 segments) holds: the second round of the same
+    queries compiles nothing. `tune` leaves the static cache size alone."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+    frames = [spark.range(0, 8, 1, 1).selectExpr(f"id * {i} + {i}")
+              for i in range(64)]
+    for df in frames:
+        df.collect()
+    before = compiles.getCount()
+    for df in frames:
+        df.collect()
+    assert compiles.getCount() == before
+
+    tune(spark)   # setting the static conf at runtime would raise
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+
+@pytest.mark.parametrize("cpus, want", [(None, 1), ("3", 3)])
+def test_parallelism_follows_the_usable_cpus(cpus, want):
+    """Unset, `SPARK_GRAFT_CPUS` falls back to the CPUs the process may
+    run on (here pinned to one), for both the local master's width and
+    the shuffle partitions; set, it wins."""
+    script = ("import json, os; os.sched_setaffinity(0, {min(os.sched_getaffinity(0))}); "
+              "from sanef_election_dashboard_etl_spark import session as s; "
+              "print(json.dumps([s.default_parallelism(), "
+              "s._RUNTIME_CONF['spark.sql.shuffle.partitions']]))")
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env["PYTHONPATH"] = ROOT
+    if cpus is not None:
+        env["SPARK_GRAFT_CPUS"] = cpus
+    run = subprocess.run([sys.executable, "-c", script], env=env,
+                         capture_output=True, text=True, timeout=60)
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert json.loads(run.stdout) == [want, str(want)]
 
 
 @pytest.fixture()

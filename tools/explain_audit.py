@@ -8,8 +8,14 @@ cartesian products outside the similarity baselines).
 
 from __future__ import annotations
 
+import os
+import re
 import sys
 
+# plans are audited at 32-way parallelism (shuffle partitions, the
+# spread_cpu_scan target) unless SPARK_GRAFT_CPUS says otherwise, so
+# PLANS.md does not change with the CPU count of the host that writes it
+os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 sys.path.insert(0, "/root/repo")
 
 from sanef_election_dashboard_etl_spark.queries import REGISTRY
@@ -464,6 +470,28 @@ EXTRA_BUILDERS = {"dedup_max_df_guard": _dedup_max_df_guard,
                   "layout_zorder_write": _layout_zorder_write,
                   "layout_bucketed_join": _layout_bucketed_join}
 
+# Ids Spark draws from process-wide counters, so they shift with whatever
+# ran before; renumbered per plan in order of first appearance
+_RENUMBER = (re.compile(r"#(\d+)"),              # expression ids (#12, #12L)
+             re.compile(r"plan_id=(\d+)"),        # exchange / subquery ids
+             re.compile(r"\*\((\d+)\)"))          # whole-stage-codegen stages
+_PID_DIR = re.compile(r"(spark_graft_\w+/)\d+/")  # per-process temp dirs
+
+
+def normalize_plan(plan: str) -> str:
+    """`plan` with its run-dependent ids renumbered and the pid in temp
+    paths replaced by `<pid>`, so an unchanged plan writes the same text
+    on every run."""
+    for pattern in _RENUMBER:
+        ids: dict[str, str] = {}
+
+        def renumber(m: re.Match, ids=ids) -> str:
+            new = ids.setdefault(m.group(1), str(len(ids) + 1))
+            return m.group(0).replace(m.group(1), new, 1)
+
+        plan = pattern.sub(renumber, plan)
+    return _PID_DIR.sub(r"\1<pid>/", plan)
+
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
@@ -476,7 +504,10 @@ def main() -> int:
            f"Generated by `tools/explain_audit.py` at `{sf_dir}`. Assertions",
            "from SCALE.md are checked mechanically; a failing assertion fails",
            "the tool. (AQE is session-default ON here, so plans show",
-           "AdaptiveSparkPlan; `isFinalPlan=false` means pre-execution.)", ""]
+           "AdaptiveSparkPlan; `isFinalPlan=false` means pre-execution.)",
+           "Expression ids, `plan_id`s and codegen stage numbers are",
+           "renumbered per plan in order of appearance, and temp-dir pids",
+           "read `<pid>`; the assertions run on the raw plan text.", ""]
     for name in AUDIT:
         df = (EXTRA_BUILDERS[name](spark, sf_dir) if name in EXTRA_BUILDERS
               else REGISTRY[name].fn(spark, sf_dir))
@@ -504,7 +535,7 @@ def main() -> int:
                   + (f"  min-count: {MIN_COUNT[name]}"
                      if name in MIN_COUNT else ""))
         out += [f"## {name}", "", f"_{checks}_", "", "```",
-                plan.rstrip()[:4000], "```", ""]
+                normalize_plan(plan.rstrip())[:4000], "```", ""]
 
     with open("/root/repo/PLANS.md", "w") as fh:
         fh.write("\n".join(out))
