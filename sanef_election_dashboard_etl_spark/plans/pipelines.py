@@ -66,24 +66,27 @@ def completed_wards(ee_voting_districts: DataFrame,
                     voting_district_votes: DataFrame, wards: DataFrame,
                     ee_id: int = 1091, delim_id: int = 78) -> DataFrame:
     """Wards (delimitation `delim_id`) with no zero-vote voting district:
-    agg -> HAVING 0 -> anti-join -> distinct -> broadcast ward enrichment.
-    The reference ships this as one nested SQL string (:385-401); here it
-    is the same logical plan declared in DataFrame ops, so Catalyst decides
-    what to push into the source scan."""
+    wards ⋉ EE_VotingDistricts(delim) ▷ unfinished, where `unfinished` is
+    agg -> HAVING 0. The reference ships this as one nested SQL string
+    (:385-401) that DISTINCTs both sides of the anti-join and then joins
+    the wards dim; here the wards dim is the left side throughout, so no
+    DISTINCT is needed: a semi-join returns each `wards` row at most once
+    and an anti-join ignores duplicates on its right side. The rows and
+    their multiplicity are the reference's (a `WardID` repeated in
+    `wards` still comes out once per `wards` row; NULL keys match
+    nothing). Both right sides are ward-id sets, bounded by the country's
+    voting districts, and are broadcast by hint, since a JDBC scan has no
+    size estimate: the only exchange is the one under the vote-sum agg."""
     unfinished = R.having_eq(
         voting_district_votes.filter(F.col("fklEEId") == ee_id),
         ["fklWardId", "fklVotingDistrict"],
         F.sum("lTotalVotesCast"), "VDTotalVotesCast", 0,
-    ).select("fklWardId").distinct()
-    complete = (
-        R.anti_join(
-            ee_voting_districts.filter(F.col("pkfklDelimID") == delim_id)
-            .select("fklWardId").distinct(),
-            unfinished, "fklWardId")
-    )
-    return R.dim_join(complete, wards,
-                      complete.fklWardId == wards.WardID) \
-            .select("ProvinceID", "MunicipalityID", "WardID")
+    ).select(F.col("fklWardId").alias("WardID"))
+    in_delim = (ee_voting_districts.filter(F.col("pkfklDelimID") == delim_id)
+                .select(F.col("fklWardId").alias("WardID")))
+    return (R.anti_join(R.semi_join(wards, F.broadcast(in_delim), "WardID"),
+                        F.broadcast(unfinished), "WardID")
+            .select("ProvinceID", "MunicipalityID", "WardID"))
 
 
 # --------------------------------------------------------------------------

@@ -388,7 +388,8 @@ def j4_anti_join(spark, sf_dir):
     anti-join is duplicate-insensitive on its right side, and o_orderkey
     is the orders primary key — each DISTINCT would cost a full exchange
     (the reference needed them because EE_VotingDistricts has duplicate
-    ward rows; plans/pipelines.completed_wards keeps them for that input).
+    ward rows; plans/pipelines.completed_wards drops them too, by keeping
+    the wards dim on the left of a semi-join and then the anti-join).
 
     ONE-EXCHANGE SHAPE (VERDICT r5 item 4 — the r5 perf-weak row): the
     fixture's (orderkey, suppkey) groups are ~unique (598,807 groups

@@ -99,6 +99,14 @@ def get_spark(app_name: str = "sanef-etl-spark",
         # first pass and 51-52 again on every later one; election_dashboard
         # 103, then 54. 1000 (4 x 250) holds ~10x that working set.
         "spark.sql.codegen.cache.maxEntries": "1000",
+        # PySpark wraps every `functions.*` call and Column operator to
+        # record its Python call site: two active-session lookups, a conf
+        # read and an origin set/clear over py4j per call. Off, one
+        # `hung_councils` build makes 268 py4j calls instead of 478.
+        # The cost: analysis errors lose their "== DataFrame ==" call
+        # site (error class and message stay). PySpark reads this once
+        # per Python process, so it is set at launch only.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         **_RUNTIME_CONF,
     }
     if conf["spark.master"] == "local" or conf["spark.master"].startswith(
@@ -351,6 +359,8 @@ def tune(spark: SparkSession) -> SparkSession:
     on who built the session. Static confs cannot be set on a running
     session, so one this package did not launch keeps Spark's defaults
     for them, among them the codegen class cache size `get_spark` sets.
+    It also keeps PySpark's call-site capture (`dataFrameDebugging`),
+    which PySpark may already have read for the process.
     """
     for k, v in _RUNTIME_CONF.items():
         spark.conf.set(k, v)

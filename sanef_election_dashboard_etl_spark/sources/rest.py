@@ -4,21 +4,30 @@ The reference fetches one JSON document per ward/municipality with an
 asyncio fan-out on the driver (SANEF_Uploader.py:38-48, :443, :573). The
 engine turns that into *executor* parallelism: a DataFrame of request
 params is partitioned across the cluster and each partition's rows are
-fetched inside `mapInPandas` (Arrow-batched in/out; the fetcher runs once
-per URL, and the default one opens a new `urllib` connection for each),
-then parsed with an explicit `from_json` schema — never schemaless
-duck-typing (:78-84).
+fetched inside `mapInPandas` (Arrow-batched in/out), then parsed with an
+explicit `from_json` schema — never schemaless duck-typing (:78-84).
+
+Inside each partition the requests overlap, as the reference's
+`asyncio.gather` did: a thread pool runs the fetcher, at most
+`MAX_IN_FLIGHT` requests at once over all fetch partitions
+(`max(1, MAX_IN_FLIGHT // n)` threads in each of `n` tasks), and rows
+keep their input order. The fetcher is therefore called from several
+threads at once and must be thread-safe. The three here are:
+`_default_fetcher` and `bearer_fetcher` open a new `urllib` connection
+per call (nothing is pooled or kept alive between URLs), and
+`fake_fetcher_from_dict` only reads its dict.
 
 The fetcher is injectable so tests (and the offline fixtures) substitute a
 deterministic local function for the network call — SURVEY.md §7 risk (a).
-Error semantics: failures surface as an `error` column, never silently
-swallowed (the reference prints-and-drops at :43-46, :377-379; SURVEY.md
-§5.2 non-goal)."""
+Error semantics: each URL's failure surfaces in that row's `error` column
+with a NULL payload, never silently swallowed (the reference
+prints-and-drops at :43-46, :377-379; SURVEY.md §5.2 non-goal)."""
 
 from __future__ import annotations
 
 import json
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import pandas as pd
@@ -28,6 +37,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 Fetcher = Callable[[str], str]
+
+# Requests in flight at once over all fetch partitions (aiohttp's default
+# connector, which the reference used, allows 100 connections).
+MAX_IN_FLIGHT = 64
 
 
 def _default_fetcher(url: str) -> str:
@@ -60,29 +73,33 @@ def fetch_json(params: DataFrame, url_col: str, payload_schema: StructType,
                parallelism: int | None = None) -> DataFrame:
     """Fan-out fetch: params (one row per request) -> (params..., payload).
 
-    Repartitions the request table so fetches spread across all executor
-    slots (replacing the reference's single-process asyncio.gather), runs
-    the HTTP GET in mapInPandas, then parses with the declared schema.
-    Output columns: all param columns + `payload` (struct) + `error`.
+    Repartitions the request table into `parallelism` tasks (default: the
+    context's default parallelism) so fetches spread across all executor
+    slots, and each task runs its URLs on `max(1, MAX_IN_FLIGHT // n)`
+    threads, so `fetcher` must be thread-safe. The pool lives for one
+    partition. Parses with the declared schema. Output columns: all param
+    columns + `payload` (struct) + `error`, in input order per partition;
+    a URL whose fetch raised has a NULL payload and its error text.
     """
     f = fetcher or _default_fetcher
     n = parallelism or params.sparkSession.sparkContext.defaultParallelism
+    threads = max(1, MAX_IN_FLIGHT // n)
     cols = params.columns
 
+    def attempt(url: str) -> tuple[str | None, str | None]:
+        try:
+            return f(url), None
+        except Exception as exc:  # surface, don't swallow
+            return None, f"{type(exc).__name__}: {exc}"
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            raws, errs = [], []
-            for url in pdf[url_col]:
-                try:
-                    raws.append(f(url))
-                    errs.append(None)
-                except Exception as exc:  # surface, don't swallow
-                    raws.append(None)
-                    errs.append(f"{type(exc).__name__}: {exc}")
-            out = pdf.copy()
-            out["__raw"] = raws
-            out["error"] = errs
-            yield out
+        with ThreadPoolExecutor(max_workers=threads) as pool:
+            for pdf in batches:
+                results = list(pool.map(attempt, pdf[url_col]))
+                out = pdf.copy()
+                out["__raw"] = [raw for raw, _ in results]
+                out["error"] = [err for _, err in results]
+                yield out
 
     raw_schema = ", ".join(f"`{c}` {params.schema[c].dataType.simpleString()}"
                            for c in cols)

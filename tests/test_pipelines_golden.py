@@ -82,6 +82,41 @@ def test_completed_wards_anti_join(spark, wards):
     assert rows(out) == [(1, 101, 10100001), (3, 301, 30100001)]
 
 
+def test_completed_wards_keeps_multiplicity_and_null_keys(spark):
+    """Duplicate EE_VotingDistricts rows, a WardID repeated in the wards
+    dim and NULL keys on every side: each wards row whose ward is in the
+    delimitation and has no zero-vote district comes out once, NULL keys
+    match nothing. One exchange runs, the one under the vote-sum agg."""
+    wards = spark.createDataFrame(
+        [(1, 101, 10100001), (1, 101, 10100001),   # repeated WardID rows
+         (1, 102, 10100001), (1, 101, 10100002), (3, 301, 30100001),
+         (3, 301, None), (9, 999, 99)],
+        "ProvinceID int, MunicipalityID int, WardID long")
+    ee_vd = spark.createDataFrame(
+        [(10100001, 78), (10100001, 78), (10100002, 78),
+         (30100001, 78), (30100001, 78), (30100001, 78),
+         (None, 78), (40000001, 78),      # NULL, and a ward not in the dim
+         (99, 12)],                        # other delimitation
+        "fklWardId long, pkfklDelimID int")
+    vd_votes = spark.createDataFrame(
+        [(1091, 10100001, 1, 100), (1091, 10100001, 1, 0),
+         (1091, 10100002, 1, 0), (1091, 10100002, 1, 0),   # unfinished twice
+         (1091, None, 7, 0),                                # NULL unfinished key
+         (1091, 30100001, 1, 70), (1091, 30100001, 2, None),
+         (999, 30100001, 3, 0)],           # other election, ignored
+        "fklEEId int, fklWardId long, fklVotingDistrict long, lTotalVotesCast long")
+    out = P.completed_wards(ee_vd, vd_votes, wards)
+    assert rows(out) == [(1, 101, 10100001), (1, 101, 10100001),
+                         (1, 102, 10100001), (3, 301, 30100001)]
+
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    exchanges = [ln for ln in final.splitlines()
+                 if "Exchange hashpartitioning" in ln]
+    assert len(exchanges) == 1, final
+    assert "fklVotingDistrict" in exchanges[0], final
+
+
 def test_voter_turnout(spark, wards):
     completed = spark.createDataFrame(
         [(1, 101, 10100001)], "ProvinceID int, MunicipalityID int, WardID long")

@@ -45,6 +45,18 @@ def test_warm_queries_compile_no_generated_code(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
 
 
+def test_get_spark_turns_call_site_capture_off(spark):
+    """No py4j call-site bookkeeping around each `functions.*` call, and
+    an analysis error still names what failed."""
+    from pyspark.errors import AnalysisException
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+    with pytest.raises(AnalysisException, match="no_such_column"):
+        spark.range(1).select("no_such_column")
+
+
 @pytest.mark.parametrize("cpus, want", [(None, 1), ("3", 3)])
 def test_parallelism_follows_the_usable_cpus(cpus, want):
     """Unset, `SPARK_GRAFT_CPUS` falls back to the CPUs the process may

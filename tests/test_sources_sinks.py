@@ -11,7 +11,7 @@ from sanef_election_dashboard_etl_spark import sinks
 from sanef_election_dashboard_etl_spark.plans.pipelines import BALLOT_SCHEMA
 from sanef_election_dashboard_etl_spark.sources.files import read_csv_dim
 from sanef_election_dashboard_etl_spark.sources.rest import (
-    RestSource, fake_fetcher_from_dict,
+    RestSource, fake_fetcher_from_dict, fetch_json,
 )
 
 from .conftest import rows
@@ -37,6 +37,32 @@ def test_rest_source_fetch_parse_and_error_surface(spark):
     # failures surface as an error column, not silent drops (vs reference :43-46)
     assert got["W404"]["payload"] is None
     assert "KeyError" in got["W404"]["error"]
+
+
+def test_rest_fetches_overlap_inside_one_partition(spark):
+    """One fetch partition, 16 slow URLs: the fetcher runs on several
+    threads at once, rows keep their input order (later URLs finish
+    first) and one failing URL still yields its own error row."""
+    def fetch(url):
+        import threading
+        import time
+
+        i = int(url[1:])
+        time.sleep(0.2 + 0.005 * (15 - i))
+        if i == 5:
+            raise RuntimeError(f"boom {url}")
+        return json.dumps({"url": url, "thread": threading.get_ident()})
+
+    urls = [f"u{i:02d}" for i in range(16)]
+    params = spark.createDataFrame([(u,) for u in urls], "url string").coalesce(1)
+    out = fetch_json(params, "url", "url string, thread long", fetch,
+                     parallelism=1).collect()
+    assert [r["url"] for r in out] == urls
+    bad = out[5]
+    assert bad["payload"] is None and bad["error"] == "RuntimeError: boom u05"
+    good = [r for r in out if r["url"] != "u05"]
+    assert all(r["error"] is None and r["payload"]["url"] == r["url"] for r in good)
+    assert len({r["payload"]["thread"] for r in good}) > 1
 
 
 def test_csv_dim_source_schema_explicit(spark, tmp_path):

@@ -57,7 +57,7 @@ def main(argv=None):
     ap.add_argument("--reps", type=int, default=2)
     args = ap.parse_args(argv)
 
-    spark = build_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = build_spark(SESS.default_parallelism())
     spark.sparkContext.setLogLevel("ERROR")
     app_id = spark.sparkContext.applicationId
 

@@ -87,7 +87,7 @@ def main() -> None:
     ap.add_argument("--ops", default="")
     args = ap.parse_args()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = SESS.default_parallelism()
     from pyspark.sql import SparkSession
     spark = SESS.tune(
         SparkSession.builder.appName("streaming-profile")
