@@ -81,8 +81,8 @@ def persist_if_heavy(df: DataFrame, level=None,
         return scoped_persist(df, level)
     if not files:  # literals/streams report no files — size unknowable
         return scoped_persist(df, level)
-    # memoized per path-set (r12, VERDICT r11 item 6) — repeated calls
-    # over the same table no longer re-stat every file on the driver
+    # input_bytes stats every file on every call (no memo), so a table
+    # rewritten in place is sized again
     total = input_bytes(files)
     if total is None:  # remote store / vanished file: assume heavy
         return scoped_persist(df, level)

@@ -20,8 +20,6 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One named table as a lazy parquet scan.

@@ -1,4 +1,4 @@
-from .numeric import dsum, davg, ratio
+from .numeric import davg, ratio
 from .maps import recode_map
 
-__all__ = ["dsum", "davg", "ratio", "recode_map"]
+__all__ = ["davg", "ratio", "recode_map"]

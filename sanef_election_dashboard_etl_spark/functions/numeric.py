@@ -56,16 +56,6 @@ def _col(c: ColumnOrName) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def dsum(c: ColumnOrName, scale: int = 2, precision: int = 18) -> Column:
-    """Order-independent sum of a double column (see module docstring).
-
-    Result is DOUBLE, rounded at `scale` (a no-op numerically — the decimal
-    already has that scale — but it pins the column type and intent).
-    """
-    dec = _col(c).cast(f"decimal({precision},{scale})")
-    return F.round(F.sum(dec).cast("double"), scale)
-
-
 def davg_units(su: Column, n: Column, in_scale: int = 0,
                out_scale: int = 4) -> Column:
     """TIE RULE template (r6/r7): exact-integer mean from an ALREADY-EXACT

@@ -381,7 +381,7 @@ def minhash_lsh_pairs(df: DataFrame, n: int = 3, k: int = 32, bands: int = 8,
         # side of the verification join: its planning-time estimate
         # (cached-relation stats) undersells the materialized size, and
         # at 100x the fixture (25M string rows) the promoted broadcast
-        # OOMs the driver — found by tools/scaling_eval.py --x100.
+        # OOMs the driver — found by a 100x scale-up run (SCALING.md).
         # sort-merge spills to disk instead of holding a per-partition
         # hash build in executor memory (32 concurrent local tasks x a
         # misestimated build side OOMed shuffle_hash too).
@@ -693,25 +693,11 @@ def simhash_pairs_arrow(df: DataFrame, max_hamming: int = 3,
     return out.withColumn("hamming", F.col("hamming").cast("int"))
 
 
-def auto_simhash_bits(n_docs: int) -> int:
-    """Signature width for a target corpus size — the simhash analog of
-    similarity.auto_n_planes. 64-bit/16-bit-chunk banding has a FIXED
-    band key space (2^16 per chunk), so uniform bucket occupancy is
-    4n/2^18 per chunk value and random candidate pairs grow n^2/2^15:
-    fine to ~200k docs, dominated by collisions by ~1M, and SATURATED by
-    ~3M (occupancy > any useful max_df — the hot-band guard would drop
-    every bucket). Doubling the signature to 128 bits doubles chunk
-    width to 32 bits and divides uniform collisions by 2^16 — the knob
-    that must scale with the corpus, measured in SCALING.md's
-    candidate-density section."""
-    return 64 if n_docs <= 200_000 else 128
-
-
 def simhash_signature_wide(df: DataFrame, id_col: str = "doc_id",
                            text_col: str = "text",
                            portable: bool = False) -> DataFrame:
     """128-bit SimHash signatures (two packed longs sh_hi/sh_lo) via the
-    Arrow fold — the wide tier auto_simhash_bits selects above ~200k
+    Arrow fold — the wide tier for corpora above ~200k
     docs. Two independent 64-bit hash families per token: xxhash64(t)
     and xxhash64(t, 1) (seed-style second column; with portable=True,
     two md5-derived 60-bit hashes — portable_hash(t) and
@@ -778,7 +764,7 @@ def simhash_pairs_wide(df: DataFrame, max_hamming: int = 3,
     signature: 4 chunks of 32 (30) bits — pigeonhole still covers
     Hamming <= 3, but the band key space is 2^32 (2^30) per chunk
     instead of 2^16, dividing uniform random collisions by ~2^16. This
-    is the configuration auto_simhash_bits selects above ~200k docs: at
+    is the configuration for corpora above ~200k docs: at
     64 bits, banding saturates near ~3M docs (every bucket crosses any
     useful max_df and the guard would drop them all); at 128 bits the
     same corpus has ~2^-16 of the bucket occupancy and the guard is
@@ -1649,9 +1635,8 @@ def pagerank(pairs: DataFrame, n_iter: int = 3, damping: float = 0.85,
              # r12 (guide §2.4): cache the edges SORTED on the join key.
              # Each iteration's edges ⋈ r sort-merge join re-sorted the
              # cached o(E) relation from scratch (n_iter Sort nodes over
-             # the same InMemoryTableScan — plan of record, plans/r12/
-             # dedup_pagerank_centrality_before.txt under the bench
-             # config); with the cache built pre-sorted the scan's
+             # the same InMemoryTableScan in the r12 before-plan under the
+             # bench config); with the cache built pre-sorted the scan's
              # outputOrdering satisfies every iteration's SMJ
              # requirement and the per-iteration sorts are elided. Row
              # order is not observable in any output (fixed-point sums

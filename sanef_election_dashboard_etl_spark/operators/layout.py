@@ -191,48 +191,6 @@ def partitioned_write(df: DataFrame, path: str,
     return path
 
 
-def compact(spark, path: str, target_file_bytes: int = 128 * 1024 * 1024,
-            sort_within_by: Sequence[str] | None = None) -> int:
-    """Small-file compaction — the standing maintenance job of any
-    long-lived ingest: streaming micro-batches, dynamic partition
-    overwrites, and per-task writers all accrete files far below the
-    task-efficient size, and a 100 TB table with 10^8 tiny files dies
-    in the driver's listing before a single byte is read.
-
-    Rewrites the dataset at `path` into ceil(bytes/target) files (from
-    the files' actual on-disk size — no data pass to plan), optionally
-    re-sorting within partitions to restore row-group clustering for
-    min/max pruning (pair with z_order for the full layout reset).
-    Writes to a temp sibling then atomically swaps directories, so a
-    crashed compaction never leaves the table half-rewritten. Returns
-    the new file count.
-
-    Scale notes: the rewrite is one repartition exchange (unavoidable —
-    that IS the compaction) + a streaming write; partitioned tables
-    should compact per-partition directory (call per day-dir) so the
-    exchange never exceeds one partition's data."""
-    import math
-    import os
-    import shutil
-
-    df = spark.read.parquet(path)
-    total = sum(os.path.getsize(os.path.join(dp, f))
-                for dp, _, fs in os.walk(path) for f in fs
-                if f.endswith(".parquet"))
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    out = df.repartition(n_files)
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    out.write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + ".__compact_old__"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return n_files
-
-
 def global_row_number(df: DataFrame, order_by: Sequence[str],
                       id_alias: str = "global_id",
                       num_partitions: int | None = None,

@@ -12,9 +12,7 @@ builds genuine BMP/WAV/PNG payloads (PNG rows cycle all five filter
 types) so each round-trip is oracle-checkable end to end — the
 `multimodal_decode` / `multimodal_decode_png` registry entries have
 DuckDB recompute dims, first decoded value, AND the sum of every
-decoded body byte from the source table. `resize_images(fake=False)` is
-also real (r6): nearest-neighbor over the decoded grid, re-encoded as
-BMP — integer index math only. `sample_frames(fake=False)` is real
+decoded body byte from the source table. `sample_frames(fake=False)` is real
 for uncompressed video (r6): `_encode_avi`/`decode_avi` handle genuine
 RIFF AVI containers (avih/strl/movi chunk walk, raw '00db' DIB
 frames; `multimodal_frame_sample` has DuckDB recompute every sampled
@@ -1985,84 +1983,11 @@ def extract_features(media: DataFrame, fake: bool = True,
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def media_stats(media: DataFrame) -> DataFrame:
-    """Metadata-only aggregate — selects no binary column, so the Parquet
-    reader prunes the payload bytes entirely (ReadSchema check in tests)."""
-    return (media.groupBy("media_type")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.sum(F.col("width").cast("long") * F.col("height")).alias("total_pixels"),
-                 F.max("n_frames").alias("max_frames")))
-
-
-RESIZED_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("out_width", IntegerType(), False),
-    StructField("out_height", IntegerType(), False),
-    StructField("resized", BinaryType(), False),
-])
-
 FRAMES_SCHEMA = StructType([
     StructField("media_id", LongType(), False),
     StructField("frame_index", IntegerType(), False),
     StructField("frame", BinaryType(), False),
 ])
-
-
-def resize_images(media: DataFrame, width: int = 224,
-                  height: int = 224, fake: bool = True) -> DataFrame:
-    """Resize over a narrow mapInPandas pass, one output row per input.
-
-    `fake=False` (r6 — the resize stub retired alongside the PNG one):
-    REAL nearest-neighbor resize of the decoded pixel grid. The payload
-    decodes through decode_image (BMP or PNG — both native now), the
-    grid resamples with two integer index gathers
-    (src_y = y*src_h DIV dst_h — pure numpy, no codec/interp library),
-    and the result re-encodes as an uncompressed 24-bit BMP
-    (`_encode_bmp` with the exact-size pixel buffer; `width` must be a
-    multiple of 4 so the BMP stride needs no padding — asserted).
-    Deterministic bit-for-bit: integer index math only.
-
-    `fake=True` remains the schema/partitioning test double:
-    sha256(payload || dims) repeated to a size-proportional budget —
-    stable, and downstream behaves exactly as a real resize (bytes
-    shrink, metadata updates)."""
-    if not fake and width % 4 != 0:
-        raise ValueError("real resize re-encodes as 24-bit BMP: width "
-                         "must be a multiple of 4 (stride padding)")
-
-    def _real_resize(p: bytes) -> bytes:
-        import numpy as np
-
-        d = decode_image(bytes(p))
-        arr = np.frombuffer(d["pixels"], np.uint8).reshape(
-            d["height"], d["width"], 3)
-        ys = (np.arange(height) * d["height"]) // height
-        xs = (np.arange(width) * d["width"]) // width
-        out = arr[ys][:, xs]
-        return _encode_bmp(out.tobytes(), width, height)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                yield pd.DataFrame({
-                    "media_id": pdf["media_id"],
-                    "out_width": width,
-                    "out_height": height,
-                    "resized": pdf["payload"].map(_real_resize),
-                })
-                continue
-            tag = f"|{width}x{height}".encode()
-            budget = max(16, (width * height) // 4096)
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "out_width": width,
-                "out_height": height,
-                "resized": pdf["payload"].map(
-                    lambda p: (hashlib.sha256((p or b"") + tag).digest()
-                               * (budget // 32 + 1))[:budget]),
-            })
-
-    return media.mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
 def sample_frames(media: DataFrame, every_n: int = 10, max_frames: int = 8,

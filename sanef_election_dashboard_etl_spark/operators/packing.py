@@ -126,8 +126,8 @@ def assign_shards(df: DataFrame, n_shards: int,
       exactly in SQL engines — the oracle-verification configuration,
       ~2x hash cost, same statistical properties.
 
-    Write shards with `write_shards` (one directory per shard via
-    layout.partitioned_write: shard=NN/part-*.parquet)."""
+    Write shards with `layout.partitioned_write(df, path, ["shard"])`
+    (one directory per shard: shard=NN/part-*.parquet)."""
     if portable:
         from .dedup import portable_hash
         key = F.concat(F.col(id_col).cast("string"),
@@ -138,17 +138,6 @@ def assign_shards(df: DataFrame, n_shards: int,
         h = F.xxhash64(F.col(id_col), F.lit(salt))
     return df.withColumn(
         "shard", F.pmod(h, F.lit(n_shards)).cast("long"))
-
-
-def write_shards(df: DataFrame, path: str, n_shards: int,
-                 id_col: str = "doc_id", salt: int = 0) -> str:
-    """Materialize the corpus as `n_shards` parquet shard directories
-    (shard=0..n-1), one file per shard per holding task — the layout a
-    data loader maps workers onto. Deterministic given (corpus, salt)."""
-    from .layout import partitioned_write
-
-    return partitioned_write(assign_shards(df, n_shards, id_col, salt),
-                             path, ["shard"])
 
 
 def pack_efficiency(df: DataFrame, token_col: str, budget: int,

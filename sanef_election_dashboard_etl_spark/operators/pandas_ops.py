@@ -8,7 +8,7 @@ model fits) and demonstrate each tier with a real, tested computation:
 
 - `tokens_per_char` (scalar pandas_udf): Series -> Series, Arrow-batched,
   vectorized numpy inside — the shape any custom scorer plugs into.
-- `zscore_by_group` (applyInPandas): per-group normalization, the
+- `zscore_by_group_exact` (applyInPandas): per-group normalization, the
   grouped-map tier — one shuffle on the group key, pandas frame per group.
 - mapInPandas lives in sources/rest.py and operators/multimodal.py (I/O
   and decode — the iterator tier's natural home).
@@ -42,31 +42,14 @@ def tokens_per_char(text: pd.Series) -> pd.Series:
     return (units / float(10 ** 6)).astype("float64")
 
 
-def zscore_by_group(df: DataFrame, group_col: str, value_col: str,
-                    out_col: str = "zscore") -> DataFrame:
-    """Grouped-map tier: per-group (x - mean) / std with population std;
-    std==0 groups yield 0.0. Output keeps all input columns + `out_col`."""
-    fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    schema = f"{fields}, `{out_col}` double"
-
-    def norm(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = pdf[value_col].astype("float64")
-        std = v.std(ddof=0)
-        pdf[out_col] = 0.0 if (std == 0 or pd.isna(std)) else (v - v.mean()) / std
-        return pdf
-
-    return df.groupBy(group_col).applyInPandas(norm, schema=schema)
-
-
 def zscore_by_group_exact(df: DataFrame, group_col: str, units_col: str,
                           in_scale: int = 2, var_scale: int = 6,
                           out_col: str = "zscore") -> DataFrame:
-    """Grouped-map tier, CROSS-ENGINE-DETERMINISTIC variant (r7, VERDICT
+    """Grouped-map tier, CROSS-ENGINE-DETERMINISTIC (r7, VERDICT
     r6 item 5): per-group z-score computed from EXACT integer units, so
     a DuckDB oracle reproduces it bit-identically with no final ROUND.
 
-    The generic zscore_by_group rounds a quotient of order-dependent
+    A float z-score rounds a quotient of order-dependent
     float aggregates — the exact failure class the TIE RULE exists for
     (a digit-4 near-tie splits the engines; same family as the davg tie
     the sf0.1 sweep surfaced in r6). Here every step up to the last two
@@ -86,8 +69,7 @@ def zscore_by_group_exact(df: DataFrame, group_col: str, units_col: str,
     division are single correctly-rounded IEEE ops. std == 0 groups
     (var_units == 0) yield 0.0.
 
-    Scale: one shuffle on the group key, groups must fit a task (same
-    contract as zscore_by_group)."""
+    Scale: one shuffle on the group key, groups must fit a task."""
     fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
                        for f in df.schema.fields)
     schema = f"{fields}, `{out_col}` double"

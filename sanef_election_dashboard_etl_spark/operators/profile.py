@@ -244,9 +244,8 @@ def dataset_fingerprint(df: DataFrame,
     Disagreement between the pair localizes the failure class: sum
     moved + xor moved = rows changed; sum moved + xor same = duplicate
     multiplicity changed. Combined with n_rows this is the manifest a
-    write audit stores (sinks.write_dataset_with_manifest) and the
-    cheap equality side of snapshot_diff (fingerprints first, per-key
-    diff only when they disagree).
+    write audit stores and the cheap equality side of snapshot_diff
+    (fingerprints first, per-key diff only when they disagree).
 
     Scale: one narrow projection + one 3-value aggregate — map-side
     partial folds, a single 1-row result; the corpus never shuffles.

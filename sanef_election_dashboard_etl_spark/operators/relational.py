@@ -156,14 +156,6 @@ def rank_in_group(df: DataFrame, keys: Sequence[str],
     return df.withColumn(alias, F.row_number().over(w))
 
 
-def topk_per_group(df: DataFrame, keys: Sequence[str],
-                   order_by: Sequence[Column], k: int) -> DataFrame:
-    """Top-k rows per key. Spark plans a partial top-k inside each map task
-    before the shuffle (WindowGroupLimit), so this scales to skewed keys."""
-    return (rank_in_group(df, keys, order_by, "__rank")
-            .filter(F.col("__rank") <= k).drop("__rank"))
-
-
 def lag_delta(df: DataFrame, keys: Sequence[str], order_by: Sequence[Column],
               value: Column, alias: str = "delta") -> DataFrame:
     """Per-key ordered difference (engine surface for sessionization §7)."""

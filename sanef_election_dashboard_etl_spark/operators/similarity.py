@@ -936,10 +936,9 @@ PQ_UNRERANKED_MAX = 200_000
 
 def route_pq_rerank(n_corpus: int, rerank: int,
                     unreranked_max: int = PQ_UNRERANKED_MAX) -> int:
-    """Auto-routing for the PQ refine stage, mirroring
-    dedup.auto_simhash_bits: pure decision function so the boundary is
-    unit-testable at both corpus scales. rerank>0 passes through
-    untouched; rerank<=0 on a corpus at/above the measured boundary
+    """Auto-routing for the PQ refine stage: pure decision function so
+    the boundary is unit-testable at both corpus scales. rerank>0 passes
+    through untouched; rerank<=0 on a corpus at/above the measured boundary
     routes to the production default (rerank=10 — the RECALL.md
     configuration that measured 1.00 where unreranked ADC measured
     0.28)."""

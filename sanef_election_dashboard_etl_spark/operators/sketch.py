@@ -14,10 +14,10 @@ Scale design:
 - Point estimates broadcast the tiny sketch to the probe side; the probe
   table never shuffles. min() over the depth rows per key is the classic
   CMS upper-bound estimate (Cormode & Muthukrishnan 2005).
-- heavy_hitters is the exact twin: one hash-partial-agg groupBy + HAVING.
-  At 100 TB you run the CMS first to find *candidate* hot keys cheaply,
-  then verify candidates exactly — same two-phase shape as the MinHash
-  candidate/verify split in operators/dedup.py.
+- heavy_hitters_fraction is the exact twin: one hash-partial-agg groupBy
+  + HAVING. At 100 TB you run the CMS first to find *candidate* hot keys
+  cheaply, then verify candidates exactly — same two-phase shape as the
+  MinHash candidate/verify split in operators/dedup.py.
 
 Hash portability: `portable=True` uses the md5-derived 60-bit hash
 (operators/dedup.py portable_hash) so a DuckDB oracle reproduces the sketch
@@ -60,7 +60,7 @@ def count_min_sketch(df: DataFrame, key_col: str, depth: int = 4,
     depth x |distinct keys| values instead of depth x |rows| — one corpus
     pass and O(vocab) md5 work instead of two passes and O(corpus) — and
     the shared counts subtree is exchange-reused with the exact branch at
-    runtime (plans/r12/sketch_cms_tokens_{before,after}.txt).
+    runtime (OPTIMIZATION_r12.md gives the before/after stage counts).
 
     Weight contract: every weight must be non-NULL and non-negative. SUM
     would skip a NULL, and a negative weight breaks the never-
@@ -104,16 +104,6 @@ def cms_estimate(sketch: DataFrame, probes: DataFrame, key_col: str,
             .na.fill({"cnt": 0})  # empty bucket => estimate 0 from that row
             .groupBy("key")
             .agg(F.min("cnt").alias("est_count")))
-
-
-def heavy_hitters(df: DataFrame, key_col: str, min_count: int) -> DataFrame:
-    """Exact heavy hitters: keys occurring >= min_count times.
-
-    groupBy + HAVING — partial aggregation map-side, one shuffle on the
-    key. The exact verification stage for CMS-surfaced candidates."""
-    return (df.groupBy(F.col(key_col).alias("key"))
-              .agg(F.count(F.lit(1)).alias("cnt"))
-              .filter(F.col("cnt") >= min_count))
 
 
 def heavy_hitters_fraction(df: DataFrame, key_col: str, num: int = 1,

@@ -971,7 +971,7 @@ def bm25_topk(df: DataFrame, queries: DataFrame, k: int = 10,
     # once per document before the explode. The r11 shape computed
     # size(filter(split(text))) in the Project ABOVE the Generate — a
     # full re-split of the text PER EXPLODED TOKEN ROW (O(tokens²) per
-    # doc; plan of record plans/r12/text_bm25_topk_before.txt node (8)).
+    # doc; OPTIMIZATION_r12.md §2 describes the before-plan).
     # With __toks a real column the split runs once per doc, dl is an
     # O(1) size() over it, the Generate explodes the materialized array,
     # and the post-explode '' filter is unnecessary (pre-filtered).
@@ -1356,8 +1356,8 @@ def bpe_encode_distinct(df: DataFrame, merges: list, id_col: str = "doc_id",
 def pick_bpe_tier(vocab_est: int, n_tokens: int, n_partitions: int,
                   row_cost: float = 0.03, fixed: int = 100_000) -> str:
     """Pure decision function for the BPE encode tier (r10, VERDICT r9
-    item 6; mirrors dedup.auto_simhash_bits — the boundary is unit-
-    testable without a corpus). Returns "batch" or "distinct".
+    item 6; the boundary is unit-testable without a corpus). Returns
+    "batch" or "distinct".
 
     Cost model, in units of one merge-replay segmentation (~5 us):
     - "batch" (bpe_encode): per-Arrow-batch word cache, so a word
@@ -1459,22 +1459,3 @@ def hash_embedding_cells(df: DataFrame, dim: int = 64,
             .groupBy(id_col, "dim_idx")
             .agg(F.sum("__s").cast("long").alias("value"))
             .filter(F.col("value") != 0))
-
-
-def hash_embedding(df: DataFrame, dim: int = 64, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
-    """Dense form of `hash_embedding_cells`: (id, embedding) with a
-    fixed-size array<double> column shaped exactly like the embeddings
-    table — drop-in input for cosine_topk/knn_graph/semantic_dedup.
-    Built JVM-side: map_from_entries over the sparse cells, then one
-    transform over sequence(0, dim-1) with coalesce-to-0 — no UDF, no
-    per-dimension join."""
-    cells = hash_embedding_cells(df, dim, id_col, text_col)
-    m = (cells.groupBy(id_col)
-         .agg(F.map_from_entries(
-             F.collect_list(F.struct("dim_idx", "value"))).alias("__m")))
-    vec = F.transform(
-        F.sequence(F.lit(0).cast("long"), F.lit(dim - 1).cast("long")),
-        lambda i: F.coalesce(F.col("__m")[i], F.lit(0).cast("long"))
-                   .cast("double"))
-    return m.select(F.col(id_col), vec.alias("embedding"))

@@ -1936,7 +1936,7 @@ def events_tumbling(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     bucket = (F.floor(F.col("ts").cast("long") / 300) * 300).cast("long")
     # r11: scaled-long accumulation (numeric.sum_units; the r7 q1
-    # postmortem) — dsum's decimal(28,2) SUM accumulator is
+    # postmortem) — a decimal(28,2) SUM accumulator is
     # Int128/BigDecimal-backed; identical value on primitive longs
     return (e.groupBy(bucket.alias("bucket_start"), F.col("event_type"))
             .agg(F.count(F.lit(1)).alias("n_events"),
@@ -2994,7 +2994,7 @@ def dedup_simhash_guarded(spark, sf_dir):
 def dedup_simhash_wide(spark, sf_dir):
     """WIDE SimHash banding (r5): 120-bit portable signature (two
     independent md5-derived hash families) in two packed longs, 4
-    chunks of 30 bits — the configuration auto_simhash_bits selects
+    chunks of 30 bits — the configuration for corpora
     above ~200k docs, because the 64-bit tier's FIXED 2^16-per-chunk
     band key space saturates (~3M docs: uniform occupancy exceeds any
     useful max_df and the hot-band guard would drop every bucket),
@@ -5670,7 +5670,7 @@ def pipe_training_data_prep(spark, sf_dir):
     curated originals.
 
     Output (doc_id, clean_text, n_tokens_kept, n_redactions) — the
-    exportable corpus, ready for packing.assign_shards/write_shards.
+    exportable corpus, ready for packing.assign_shards.
     Catalyst fuses the whole chain: one documents scan feeds the
     fingerprint agg and the gram pipeline; the survivor semi-join
     broadcasts; no stage materializes. The entire pipeline replays in
@@ -5795,8 +5795,8 @@ def export_shard_balance(spark, sf_dir):
     hash): the corpus dealt into 16 deterministic shards as a NARROW
     projection (no shuffle until this balance check's own aggregate),
     with per-shard doc and token totals proving statistical balance —
-    the write path (packing.write_shards) lands one directory per shard
-    via partitioned_write. Striping would balance exactly but needs the
+    layout.partitioned_write on `shard` lands one directory per shard.
+    Striping would balance exactly but needs the
     global sort hash-mod exists to avoid; spread shrinks ~1/sqrt(docs
     per shard) (test-asserted <5% at the 5k-doc fixture)."""
     from .operators.packing import assign_shards
@@ -8539,8 +8539,7 @@ def profile_dataset_fingerprint(spark, sf_dir):
     """Order-independent dataset content fingerprint (operators/
     profile.py dataset_fingerprint): one narrow scan folding to a
     single (n_rows, xor_fp, sum_fp) row — the write-audit /
-    copy-verification primitive (_MANIFEST.json in
-    sinks.write_dataset_with_manifest) and the cheap equality check in
+    copy-verification primitive and the cheap equality check in
     front of snapshot_diff. xor = set semantics, decimal sum = multiset
     semantics; both mergeable across shards.
 

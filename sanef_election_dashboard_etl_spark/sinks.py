@@ -5,7 +5,8 @@ S8: the reference writes one timestamped CSV with pandas `to_csv`
 thousands of rows) by construction, so `write_csv_single` collects the
 result to the driver in one action and writes it with the stdlib CSV
 writer: the same bytes as `to_csv(index=False)`, with no Spark write job
-and no temporary directory. Large extracts use the partitioned writer.
+and no temporary directory. Large training extracts go through
+`write_jsonl`, a distributed write.
 
 S9: the dashboard upload (multipart POST, overwrite semantics, :57-64) is
 a driver-side adapter *outside* the Spark plan; in streaming mode it is the
@@ -39,16 +40,6 @@ def write_csv_single(df: DataFrame, path: str) -> str:
         out = csv.writer(fh, lineterminator="\n")
         out.writerow(table.column_names)
         out.writerows(zip(*(col.to_pylist() for col in table.columns)))
-    return path
-
-
-def write_csv_partitioned(df: DataFrame, path: str,
-                          partition_by: tuple[str, ...] = ()) -> str:
-    """Scale path: parallel CSV write, optionally hive-partitioned."""
-    w = df.write.option("header", True).mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.csv(path)
     return path
 
 
@@ -108,29 +99,6 @@ def upload_http(path: str, endpoint: str, dataset_id: int, token: str,
         return {"status": resp.status}
 
 
-def write_with_metrics(df, path: str, metrics: dict,
-                       fmt: str = "parquet") -> dict:
-    """Write `df` and collect audit metrics IN THE SAME JOB — Spark's
-    `Observation` API attaches named aggregate expressions to the plan,
-    so the counts/sums a 100 TB pipeline must record (rows admitted,
-    tokens kept, nulls seen) cost zero extra passes: the write job
-    itself accumulates them, where a separate `df.agg(...).collect()`
-    would re-read and recompute the entire input.
-
-    `metrics` maps name -> aggregate Column (F.count, F.sum, ...);
-    returns the observed {name: value} dict after the write commits.
-    Works for any DataFrame writer format; pair with the manifest/shard
-    writers for ingest bookkeeping. (Observation only supports batch
-    DataFrames; streaming uses `observe` on the stream + a listener.)
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    observed = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
-    observed.write.format(fmt).mode("overwrite").save(path)
-    return obs.get
-
-
 def write_jsonl(df, path: str, n_files: int | None = None,
                 compression: str | None = None) -> None:
     """Export as JSONL (one JSON object per line) — the training-data
@@ -147,64 +115,3 @@ def write_jsonl(df, path: str, n_files: int | None = None,
     if compression:
         writer = writer.option("compression", compression)
     writer.json(path)
-
-
-def write_dataset_with_manifest(df, path: str,
-                                cols: list[str] | None = None) -> dict:
-    """Parquet export with a content manifest — the write-audit artifact
-    a 100 TB pipeline stores next to every snapshot: `_MANIFEST.json`
-    holds the schema, row count, and the order-independent
-    xor/sum fingerprints (profile.dataset_fingerprint) RECOMPUTED FROM
-    THE WRITTEN FILES, so `verify_manifest` can later prove a copy /
-    re-ingest / engine migration byte-equivalent without a row-by-row
-    compare (and snapshot_diff only runs when the cheap fingerprint
-    says something changed).
-
-    The dataset write is a plain distributed parquet save; the manifest
-    pass is one read-back scan folding to a single row (map-side
-    partial aggregates; nothing collects but the 1-row result). The
-    manifest itself is driver-written — it is metadata-sized by
-    construction. Returns the manifest dict."""
-    import json as _json
-    import os
-
-    from .operators.profile import dataset_fingerprint
-
-    df.write.mode("overwrite").parquet(path)
-    spark = df.sparkSession
-    back = spark.read.parquet(path)
-    row = dataset_fingerprint(back, cols).collect()[0]
-    manifest = {
-        "format": "parquet",
-        "schema": back.schema.simpleString(),
-        "columns": list(cols or back.columns),
-        "n_rows": row["n_rows"],
-        "xor_fp": row["xor_fp"],
-        "sum_fp": str(row["sum_fp"]),
-    }
-    with open(os.path.join(path, "_MANIFEST.json"), "w") as fh:
-        _json.dump(manifest, fh, sort_keys=True)
-    return manifest
-
-
-def verify_manifest(spark, path: str) -> dict:
-    """Recompute the fingerprints of the dataset at `path` and compare
-    against its `_MANIFEST.json`. Returns {"ok": bool, "expected": ...,
-    "actual": ...}; ok=False localizes the failure class via the
-    fingerprint pair (see dataset_fingerprint: sum moved + xor same =
-    duplicate multiplicity changed; both moved = content changed;
-    n_rows alone = truncation)."""
-    import json as _json
-    import os
-
-    from .operators.profile import dataset_fingerprint
-
-    with open(os.path.join(path, "_MANIFEST.json")) as fh:
-        manifest = _json.load(fh)
-    back = spark.read.parquet(path)
-    row = dataset_fingerprint(back, manifest["columns"]).collect()[0]
-    actual = {"n_rows": row["n_rows"], "xor_fp": row["xor_fp"],
-              "sum_fp": str(row["sum_fp"])}
-    expected = {k: manifest[k] for k in ("n_rows", "xor_fp", "sum_fp")}
-    return {"ok": actual == expected, "expected": expected,
-            "actual": actual}

@@ -83,7 +83,7 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
     drops arrive in. Splittable blocks parallelize like parquet; schema
     travels in the file (no inference scan). Column pruning applies;
     row-oriented storage means no predicate pushdown — land avro, but
-    compact to parquet/ORC for the analytic tier (layout.compact)."""
+    rewrite to parquet/ORC for the analytic tier."""
     return spark.read.format(_avro_format(spark)).load(path)
 
 

@@ -12,10 +12,9 @@ Inside each partition the requests overlap, as the reference's
 `MAX_IN_FLIGHT` requests at once over all fetch partitions
 (`max(1, MAX_IN_FLIGHT // n)` threads in each of `n` tasks), and rows
 keep their input order. The fetcher is therefore called from several
-threads at once and must be thread-safe. The three here are:
+threads at once and must be thread-safe. The two here are:
 `_default_fetcher` and `bearer_fetcher` open a new `urllib` connection
-per call (nothing is pooled or kept alive between URLs), and
-`fake_fetcher_from_dict` only reads its dict.
+per call (nothing is pooled or kept alive between URLs).
 
 The fetcher is injectable so tests (and the offline fixtures) substitute a
 deterministic local function for the network call — SURVEY.md §7 risk (a).
@@ -25,7 +24,6 @@ prints-and-drops at :43-46, :377-379; SURVEY.md §5.2 non-goal)."""
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -125,14 +123,3 @@ class RestSource:
                                      F.col(key_col).cast("string")))
         out = fetch_json(params, "__url", self.payload_schema, self.fetcher)
         return out.drop("__url")
-
-
-def fake_fetcher_from_dict(responses: dict[str, dict]) -> Fetcher:
-    """Deterministic offline fetcher for tests/fixtures: url -> JSON text."""
-
-    def fetch(url: str) -> str:
-        if url not in responses:
-            raise KeyError(f"no fixture for {url}")
-        return json.dumps(responses[url])
-
-    return fetch

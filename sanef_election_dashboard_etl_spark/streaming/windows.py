@@ -133,10 +133,9 @@ def interval_join_streams(left: DataFrame, right: DataFrame, key: str,
 
 
 def observe_stream(df: DataFrame, name: str, metrics: dict) -> DataFrame:
-    """Per-micro-batch pipeline metrics with ZERO extra passes — the
-    streaming twin of sinks.write_with_metrics: `observe` attaches named
-    aggregate expressions to the streaming plan, and each batch's values
-    arrive in that batch's StreamingQueryProgress under
+    """Per-micro-batch pipeline metrics with ZERO extra passes: `observe`
+    attaches named aggregate expressions to the streaming plan, and each
+    batch's values arrive in that batch's StreamingQueryProgress under
     `observedMetrics[name]` (read them in a StreamingQueryListener's
     onQueryProgress, or from `query.lastProgress`). The ingest monitors
     (rows admitted, nulls seen, drift inputs) ride the batch job itself

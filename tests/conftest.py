@@ -1,3 +1,5 @@
+import json
+
 import pytest
 
 from sanef_election_dashboard_etl_spark.session import get_spark
@@ -16,3 +18,15 @@ def rows(df, *cols):
     # None sorts first (stringified key) so NULL-bearing rows compare fine
     return sorted((tuple(r) for r in picked.collect()),
                   key=lambda t: tuple((v is not None, str(v)) for v in t))
+
+
+def fake_fetcher_from_dict(responses: dict[str, dict]):
+    """Deterministic offline REST fetcher: url -> JSON text of its fixture;
+    an unknown url raises KeyError (surfacing in the row's `error`)."""
+
+    def fetch(url: str) -> str:
+        if url not in responses:
+            raise KeyError(f"no fixture for {url}")
+        return json.dumps(responses[url])
+
+    return fetch

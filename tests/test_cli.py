@@ -7,11 +7,9 @@ import pytest
 from sanef_election_dashboard_etl_spark.cli import (
     PIPELINES, Args, jdbc_from_args, rest_from_args, run_pipeline,
 )
-from sanef_election_dashboard_etl_spark.sources.rest import (
-    RestSource, fake_fetcher_from_dict,
-)
+from sanef_election_dashboard_etl_spark.sources.rest import RestSource
 
-from .conftest import rows
+from .conftest import fake_fetcher_from_dict, rows
 
 
 @pytest.fixture(scope="module")

@@ -134,8 +134,7 @@ def test_simhash_hot_band_guard(spark):
 def test_simhash_wide_tier(spark, docs):
     """128-bit wide tier: exact-dup docs pair at hamming 0 in both hash
     configurations, signatures are two independent longs (families
-    disagree on non-dup docs), the max_df guard composes, and
-    auto_simhash_bits picks the width by corpus size."""
+    disagree on non-dup docs) and the max_df guard composes."""
     for portable in (False, True):
         pairs = {(r["id_a"], r["id_b"]): r["hamming"]
                  for r in D.simhash_pairs_wide(
@@ -151,8 +150,6 @@ def test_simhash_wide_tier(spark, docs):
         "doc_id long, text string")
     guarded = D.simhash_pairs_wide(clones, max_hamming=3, max_df=5).collect()
     assert guarded == []
-    assert D.auto_simhash_bits(100_000) == 64
-    assert D.auto_simhash_bits(5_000_000) == 128
 
 
 def test_simhash_arrow_edge_docs_match_expression(spark):
@@ -547,28 +544,6 @@ def test_sample_frames_real_tier(spark):
             assert bytes(r["frame"])[0] == tb[o]
 
 
-def test_real_resize_nearest_neighbor(spark):
-    # fake=False resize (r6): decode (BMP and PNG) -> integer NN gather
-    # -> BMP re-encode. The output must be a decodable BMP of the target
-    # dims whose pixel (0,0) equals the source pixel the integer map
-    # selects (src_y = 0*src_h DIV dst_h = 0 -> source pixel 0, which by
-    # tile construction is text byte 0).
-    docs = spark.createDataFrame(
-        [(1, "alpha bravo charlie"), (2, "zulu")],
-        "doc_id long, text string")
-    for fmt in ("bmp", "png"):
-        media = M.synthesize_media_encoded(docs, "image", image_format=fmt)
-        out = {r["media_id"]: r for r in
-               M.resize_images(media, 8, 8, fake=False).collect()}
-        for mid, text in [(1, "alpha bravo charlie"), (2, "zulu")]:
-            d = M.decode_bmp(bytes(out[mid]["resized"]))
-            assert (d["width"], d["height"]) == (8, 8)
-            assert len(d["pixels"]) == 3 * 8 * 8
-            assert d["pixels"][0] == text.encode()[0], (fmt, mid)
-    with pytest.raises(ValueError):
-        M.resize_images(media, 10, 8, fake=False)  # stride-pad width
-
-
 def test_png_roundtrip_every_filter_type():
     # h >= 5 rows means row filters 0..4 (None/Sub/Up/Average/Paeth) ALL
     # execute; the decode must reproduce the raw tiled bytes exactly
@@ -618,12 +593,6 @@ def test_decode_media_non_ascii_and_signed_samples(spark):
     assert aud[2]["first_value"] == ord("x") + 256 * ord("x")  # tile repeat
     assert aud[3]["first_value"] == 0
     assert aud[3]["n_samples"] == 16             # blen 0 -> 0 % 997 + 16
-
-
-def test_media_stats_prunes_payload(spark, docs):
-    media = M.synthesize_media(docs)
-    plan = M.media_stats(media)._jdf.queryExecution().optimizedPlan().toString()
-    assert "payload" not in plan  # column pruning drops the binary bytes
 
 
 def test_ivf_topk_finds_nearest(spark, vecs):
@@ -711,17 +680,6 @@ def test_weighted_sample_biases_toward_heavy_rows(spark):
 
 def test_multimodal_resize_and_frame_sample(spark, docs):
     media = M.synthesize_media(docs)
-    resized = {r["media_id"]: r for r in
-               M.resize_images(media, 224, 224).collect()}
-    assert len(resized) == 5
-    assert resized[1]["out_width"] == 224
-    assert resized[1]["resized"] == resized[2]["resized"]   # same payload
-    assert resized[1]["resized"] != resized[4]["resized"]
-    # deterministic across runs
-    again = {r["media_id"]: r["resized"] for r in
-             M.resize_images(media, 224, 224).collect()}
-    assert resized[3]["resized"] == again[3]
-
     frames = M.sample_frames(media, every_n=10, max_frames=4).collect()
     by_id = {}
     for r in frames:
@@ -1022,8 +980,6 @@ def test_heavy_hitters_fraction_threshold(spark):
     got = {r["key"] for r in
            SK.heavy_hitters_fraction(tok, "token", num=30, den=100).collect()}
     assert got == {"hot", "warm"}
-    assert {r["key"] for r in
-            SK.heavy_hitters(tok, "token", min_count=31).collect()} == {"hot"}
 
 
 def test_z_value_interleaves_bits(spark):
@@ -1564,7 +1520,7 @@ def test_strip_fully_duplicated_doc_yields_empty_text(spark):
 
 
 # --------------------------------------------------------------------------
-# Training-shard export (packing.assign_shards / write_shards)
+# Training-shard export (packing.assign_shards)
 # --------------------------------------------------------------------------
 
 def test_assign_shards_deterministic_and_layout_independent(spark):
@@ -1606,24 +1562,6 @@ def test_assign_shards_token_balance(spark):
     assert len(totals) == 16
     # 500-doc fixture -> ~31 docs/shard; cv/sqrt(31) ~ 10% -> allow 35%
     assert all(abs(t - mean) / mean < 0.35 for t in totals), totals
-
-
-def test_write_shards_one_dir_per_shard(spark, tmp_path):
-    import glob
-    import os
-
-    from sanef_election_dashboard_etl_spark.operators.packing import \
-        write_shards
-
-    df = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(200)], "doc_id long, text string")
-    path = write_shards(df, str(tmp_path / "shards"), 4)
-    dirs = sorted(os.path.basename(d)
-                  for d in glob.glob(os.path.join(path, "shard=*")))
-    assert dirs == ["shard=0", "shard=1", "shard=2", "shard=3"]
-    back = spark.read.parquet(path)
-    assert back.count() == 200
-    assert back.select("doc_id").distinct().count() == 200
 
 
 def test_semantic_decontaminate_flags_planted_eval_clone(spark):
@@ -3210,30 +3148,6 @@ def test_numeric_drift_binned_known_values(spark):
     assert numeric_drift_binned(c, c, "v").first().tvd == 0.0
 
 
-def test_hash_embedding_dense_matches_cells_and_feeds_cosine(spark):
-    from sanef_election_dashboard_etl_spark.operators.text import (
-        hash_embedding, hash_embedding_cells)
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "alpha beta gamma"),
-         (3, "delta epsilon zeta eta theta")],
-        "doc_id long, text string")
-    dense = {r.doc_id: r.embedding
-             for r in hash_embedding(docs, dim=16).collect()}
-    cells = {(r.doc_id, r.dim_idx): r.value
-             for r in hash_embedding_cells(docs, dim=16).collect()}
-    for d, vec in dense.items():
-        assert len(vec) == 16
-        for i, v in enumerate(vec):
-            assert v == float(cells.get((d, i), 0))
-    # identical docs -> identical vectors -> cosine 1 via the ANN tier
-    assert dense[1] == dense[2] and dense[1] != dense[3]
-    emb = hash_embedding(docs, dim=16) \
-        .withColumnRenamed("doc_id", "vec_id")
-    got = rows(S.cosine_topk(
-        emb, emb.filter(F.col("vec_id") == 1), k=1), "neighbor_id")
-    assert got == [(2,)]
-
-
 def test_kmeans_spherical_recovers_blobs(spark):
     # two well-separated directional blobs; seeds (ids 0 and 1) start
     # one in each blob, so two Lloyd rounds must keep them apart
@@ -3509,7 +3423,7 @@ def test_jpeg_decoder_full_ac_alphabet_matches_reference_idct():
 
 
 def test_jpeg_flows_through_generic_media_tiers(spark):
-    # decode_media / extract_features(fake=False) / resize_images
+    # decode_media / extract_features(fake=False)
     # dispatch on magic bytes, so JPEG payloads ride the same narrow
     # mapInPandas tiers as BMP/PNG with no special-casing
     docs = spark.createDataFrame(
@@ -3526,13 +3440,6 @@ def test_jpeg_flows_through_generic_media_tiers(spark):
         assert r["value_sum"] == sum(192 * t[i % len(t)] for i in range(nb))
     feats = M.extract_features(media, fake=False).collect()
     assert all(len(r["feature"]) == 16 for r in feats)
-    resized = {r["media_id"]: r for r in
-               M.resize_images(media, width=16, height=16,
-                               fake=False).collect()}
-    # re-encoded as BMP 16x16: nearest-neighbor over the decoded grid
-    for mid, r in resized.items():
-        d = M.decode_image(bytes(r["resized"]))
-        assert (d["width"], d["height"]) == (16, 16)
 
 
 def _flac_fixture_frame(samples, *, method=0, porder=0, wasted=0,

@@ -4,9 +4,7 @@ import math
 
 import pyspark.sql.functions as F
 
-from sanef_election_dashboard_etl_spark.operators.pandas_ops import (
-    tokens_per_char, zscore_by_group,
-)
+from sanef_election_dashboard_etl_spark.operators.pandas_ops import tokens_per_char
 
 
 def test_scalar_pandas_udf(spark):
@@ -17,19 +15,6 @@ def test_scalar_pandas_udf(spark):
     assert got[1] == 2 / 5
     assert got[2] == 0.0
     assert got[3] == 1.0
-
-
-def test_grouped_zscore(spark):
-    df = spark.createDataFrame(
-        [("a", 1.0), ("a", 3.0), ("b", 5.0)], "g string, v double")
-    got = sorted((r["g"], r["v"], r["zscore"])
-                 for r in zscore_by_group(df, "g", "v").collect())
-    assert got[0] == ("a", 1.0, -1.0)
-    assert got[1] == ("a", 3.0, 1.0)
-    assert got[2][2] == 0.0  # single-element group: std 0 -> 0.0
-    # schema preserved + zscore appended
-    out = zscore_by_group(df, "g", "v")
-    assert out.columns == ["g", "v", "zscore"]
 
 
 def test_udtf_chunking_covers_every_token_once(spark):

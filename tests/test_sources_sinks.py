@@ -10,11 +10,9 @@ import pytest
 from sanef_election_dashboard_etl_spark import sinks
 from sanef_election_dashboard_etl_spark.plans.pipelines import BALLOT_SCHEMA
 from sanef_election_dashboard_etl_spark.sources.files import read_csv_dim
-from sanef_election_dashboard_etl_spark.sources.rest import (
-    RestSource, fake_fetcher_from_dict, fetch_json,
-)
+from sanef_election_dashboard_etl_spark.sources.rest import RestSource, fetch_json
 
-from .conftest import rows
+from .conftest import fake_fetcher_from_dict, rows
 
 
 def test_rest_source_fetch_parse_and_error_surface(spark):
@@ -124,13 +122,6 @@ def test_write_csv_single_empty_frame_writes_header_only(spark, tmp_path):
     sinks.write_csv_single(df, path)
     with open(path, "rb") as fh:
         assert fh.read() == b"Geography,Count\n"
-
-
-def test_write_csv_partitioned(spark, tmp_path):
-    df = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
-    path = str(tmp_path / "part_out")
-    sinks.write_csv_partitioned(df, path, partition_by=("k",))
-    assert os.path.isdir(os.path.join(path, "k=a"))
 
 
 def test_upload_http_adapter_injectable(tmp_path):
@@ -292,51 +283,6 @@ def test_merge_schema_reads_evolving_partitions(spark, tmp_path):
     assert "ReadSchema: struct<id:bigint,v:string>" in plan
 
 
-def test_compact_merges_small_files_and_preserves_rows(spark, tmp_path):
-    from sanef_election_dashboard_etl_spark.operators.layout import compact
-
-    import glob
-    path = str(tmp_path / "fragged")
-    # simulate micro-batch accretion: 20 tiny appends -> >= 20 files
-    for i in range(20):
-        spark.createDataFrame([(i * 100 + j, f"row {j}") for j in range(100)],
-                              "id long, v string") \
-            .coalesce(1).write.mode("append").parquet(path)
-    before = glob.glob(f"{path}/*.parquet")
-    assert len(before) >= 20
-    n = compact(spark, path, target_file_bytes=1 << 30)
-    after = glob.glob(f"{path}/*.parquet")
-    assert n == 1 and len(after) == 1
-    back = spark.read.parquet(path)
-    assert back.count() == 2000
-    assert back.select("id").distinct().count() == 2000
-    assert not glob.glob(f"{path}.__compact_*")   # swap left no residue
-
-
-def test_write_with_metrics_single_job(spark, tmp_path):
-    """Observation metrics ride the write job: values equal independent
-    aggregates, and no second scan of the input is needed (the observe
-    node is part of the written plan)."""
-    from pyspark.sql import functions as F
-
-    from sanef_election_dashboard_etl_spark.sinks import write_with_metrics
-
-    df = spark.range(1000).select(
-        F.col("id"),
-        F.when(F.col("id") % 10 == 0, None).otherwise(F.col("id") % 7)
-        .alias("v"))
-    out = str(tmp_path / "obs_out")
-    got = write_with_metrics(
-        df, out,
-        {"n_rows": F.count(F.lit(1)),
-         "n_null_v": F.count(F.lit(1)) - F.count("v"),
-         "sum_v": F.sum("v")})
-    assert got["n_rows"] == 1000
-    assert got["n_null_v"] == 100
-    assert got["sum_v"] == df.agg(F.sum("v")).first()[0]
-    assert spark.read.parquet(out).count() == 1000
-
-
 def test_permissive_csv_carries_corrupt_records(spark, tmp_path):
     """Ingest robustness: malformed CSV rows land in the
     _corrupt_record column under PERMISSIVE mode instead of failing the
@@ -391,27 +337,6 @@ def test_jsonl_roundtrip_and_permissive(spark, tmp_path):
     strict = read_jsonl(spark, str(feed), schema)
     with _pytest.raises(Exception):
         strict.collect()
-
-
-def test_manifest_roundtrip_and_tamper_detection(spark, tmp_path):
-    from sanef_election_dashboard_etl_spark.sinks import (
-        verify_manifest, write_dataset_with_manifest)
-    df = spark.createDataFrame(
-        [(i, f"doc {i}", "en") for i in range(100)],
-        "doc_id long, text string, lang string")
-    path = str(tmp_path / "snap")
-    manifest = write_dataset_with_manifest(df, path)
-    assert manifest["n_rows"] == 100
-    # clean verify: ok, independent of read-back partition order
-    assert verify_manifest(spark, path)["ok"]
-    # tamper: drop one data file -> row count + fingerprints move
-    import glob
-    import os
-    victim = sorted(glob.glob(os.path.join(path, "part-*.parquet")))[0]
-    os.remove(victim)
-    v = verify_manifest(spark, path)
-    assert not v["ok"]
-    assert v["actual"]["n_rows"] < v["expected"]["n_rows"]
 
 
 def test_dataset_fingerprint_semantics(spark):
