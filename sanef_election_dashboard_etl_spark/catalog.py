@@ -115,8 +115,7 @@ def _stamps(path: str) -> tuple[tuple[str, int, int], ...]:
     return tuple(out)
 
 
-def spread_cpu_scan(df: DataFrame, parallelism: int | None = None,
-                    key_col: str | None = None) -> DataFrame:
+def spread_cpu_scan(df: DataFrame, key_col: str | None = None) -> DataFrame:
     """Adaptive repartition-after-read for CPU-heavy per-row work over
     under-parallel scans (optimization guide §2.5 "input skew: one huge
     unsplittable file ... repartition immediately after the read").
@@ -159,7 +158,7 @@ def spread_cpu_scan(df: DataFrame, parallelism: int | None = None,
     spread."""
     from .session import default_parallelism
 
-    want = int(parallelism or default_parallelism())
+    want = default_parallelism()
     try:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001 — non-file-sourced plans: leave as-is

@@ -135,14 +135,15 @@ REST_ENDPOINTS = {
 }
 
 
-def rest_from_args(a: Args, name: str, ee_id: int = 1091) -> RestSource:
+def rest_from_args(a: Args, name: str) -> RestSource:
     """The pipeline's authenticated IEC source: url_template is the
-    reference's endpoint with ElectoralEventID pre-bound; the per-row key
-    is the remaining query-string suffix (&ProvinceID=..&MunicipalityID=..
-    &WardID=..) built in run_pipeline, mirroring SANEF_Uploader.py's
-    (url, query) split at :39."""
+    reference's endpoint with ElectoralEventID pre-bound to 1091,
+    `run_pipeline`'s default event; the per-row key is the remaining
+    query-string suffix (&ProvinceID=..&MunicipalityID=..&WardID=..)
+    built in run_pipeline, mirroring SANEF_Uploader.py's (url, query)
+    split at :39."""
     path, schema = REST_ENDPOINTS[name]
-    return RestSource(f"{IEC_API}{path}?ElectoralEventID={ee_id}{{}}",
+    return RestSource(f"{IEC_API}{path}?ElectoralEventID=1091{{}}",
                       schema, fetcher=bearer_fetcher(a.iec_token))
 
 

@@ -242,18 +242,15 @@ def minhash_signatures(grams: DataFrame, k: int = 32, seed: int = 42,
     with_h = grams.select(F.col(id_col), h)
     mins = [F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(_P))).alias(f"mh_{i}")
             for i, (a, b) in enumerate(params)]
-    # the set size rides along in the same aggregation — the verification
-    # stage needs it, and a separate counting pass over the shingle table
-    # would double the read
+    # the set size rides along in the same aggregation; no caller reads
+    # it now that minhash_lsh_pairs takes sizes from its per-doc sets
     return with_h.groupBy(id_col).agg(*mins, F.count(F.lit(1)).alias("sz"))
 
 
 def minhash_lsh_pairs(df: DataFrame, n: int = 3, k: int = 32, bands: int = 8,
                       min_jaccard: float = 0.5, seed: int = 42,
                       id_col: str = "doc_id", text_col: str = "text",
-                      max_df: int | None = None,
-                      prefilter_margin: float | None = None,
-                      verify: str = "sets") -> DataFrame:
+                      max_df: int | None = None) -> DataFrame:
     """MinHash + LSH near-dup pairs with exact-Jaccard verification.
 
     signature (k mins) -> b bands of k/b rows -> band-hash bucket join ->
@@ -266,51 +263,27 @@ def minhash_lsh_pairs(df: DataFrame, n: int = 3, k: int = 32, bands: int = 8,
     otherwise both skew the verification join key and drag unrelated docs'
     signatures together.
 
-    Verification-cost controls (VERDICT r3 item 6 — at sf0.1 the exact
-    verification join was ~70% of the wall):
-
-    - `prefilter_margin`: estimated-Jaccard prefilter from the k mins
-      ALREADY computed — E[matching mins / k] = J, so candidates with
-      estimate < min_jaccard - margin skip exact verification. margin
-      0.25 ~= 3 sigma at k=32, J=0.5 (sigma = sqrt(J(1-J)/k) ~ 0.088):
-      P[drop a true >=0.5-Jaccard pair] < ~1e-3 per boundary pair, and
-      band-collision accidentals (J ~ 0) are killed before touching the
-      shingle table. Default None = exact-output guarantee: on the
-      fixture corpus banding is already precise (every candidate
-      measures est >= 0.8) and the two signature joins are pure
-      overhead; set ~0.25 when banding produces large accidental
-      candidate sets (hot shingles, low-diversity corpora) to shrink
-      the candidate broadcast before verification.
-    - `verify="sets"` (default): per-doc shingle SETS (collect_set —
-      one shuffle, no sort; set semantics are exact because shingles()
-      emits distinct grams) joined to candidates map-side via a
-      broadcast of the bounded candidate-pair list, intersection by
-      array_intersect. The shingle table is never sorted and only
-      candidate docs' sets travel into the pair join. Measured at
-      sf0.1: 1.45s -> 0.88s wall. Skew note: a doc in many candidate
-      pairs ships its set once per pair — bounded by banding + max_df;
-      the `merge` strategy is the fallback when candidate fan-out or
-      per-doc set size makes array rows too heavy.
-    - `verify="merge"`: the r3 shape — candidate pairs expand against
-      the raw (id, shingle) table in a sort-merge join. Sorts the full
-      gram table but keeps every row narrow; the conservative choice
-      for extreme per-doc cardinalities (SCALING.md measures both at
-      10x/100x)."""
+    Verification (VERDICT r3 item 6 — at sf0.1 the exact verification
+    join was ~70% of the wall) uses per-doc shingle SETS (collect_set —
+    one shuffle, no sort; set semantics are exact because shingles()
+    emits distinct grams) joined to candidates map-side via a broadcast
+    of the bounded candidate-pair list, intersection by
+    array_intersect. The shingle table is never sorted and only
+    candidate docs' sets travel into the pair join. Measured at sf0.1:
+    1.45s -> 0.88s wall against a sort-merge join of candidates with
+    the raw (id, shingle) table. Skew note: a doc in many candidate
+    pairs ships its set once per pair — bounded by banding + max_df."""
     assert k % bands == 0
     rows_per_band = k // bands
     grams = shingles(df, n, id_col, text_col) if n > 1 else token_set(df, id_col, text_col)
     if max_df is not None:
         grams = drop_hot_shingles(grams, max_df, id_col)
-    # the shingle table feeds four consumers (signatures, two sides of the
-    # verification join, sizes): persist it instead of recomputing the
-    # tokenize+explode 4x. At cluster scale, checkpoint to storage instead
-    # of memory — same plan shape.
+    # the shingle table feeds two consumers (signatures, per-doc sets):
+    # persist it instead of recomputing the tokenize+explode twice.
     grams = scoped_persist(grams)
-    # sig feeds banding, the estimate prefilter (both sides), and the
-    # size lookups (both sides) — five subtree occurrences; one row per
-    # doc (k longs + count), so persist it rather than re-running the
-    # gram aggregation per consumer. Same checkpoint-to-storage note as
-    # grams at cluster scale.
+    # sig feeds both sides of the band self-join; one row per doc (k
+    # longs + count), so persist it rather than re-running the gram
+    # aggregation per side.
     sig = scoped_persist(minhash_signatures(grams, k, seed, id_col))
 
     band_structs = F.array(*[
@@ -329,71 +302,27 @@ def minhash_lsh_pairs(df: DataFrame, n: int = 3, k: int = 32, bands: int = 8,
                   .filter(F.col("id_a") < F.col("id_b"))
                   .select("id_a", "id_b").distinct())
 
-    if prefilter_margin is not None:
-        # estimated Jaccard from the signatures already in hand: one
-        # narrow broadcast join per side (per-doc rows, k longs each) —
-        # no shingles touched. E[matching mins / k] = J; see docstring
-        # for the margin math.
-        sig_a = sig.select(F.col(id_col).alias("id_a"),
-                           *[F.col(f"mh_{i}").alias(f"__a{i}")
-                             for i in range(k)])
-        sig_b = sig.select(F.col(id_col).alias("id_b"),
-                           *[F.col(f"mh_{i}").alias(f"__b{i}")
-                             for i in range(k)])
-        matches = sum(F.when(F.col(f"__a{i}") == F.col(f"__b{i}"), 1)
-                      .otherwise(0) for i in range(k))
-        candidates = (candidates
-                      .join(F.broadcast(sig_a), "id_a")
-                      .join(F.broadcast(sig_b), "id_b")
-                      .filter(matches >=
-                              F.lit((min_jaccard - prefilter_margin) * k))
-                      .select("id_a", "id_b"))
-
-    if verify == "sets":
-        # per-doc shingle sets: one shuffle (hash agg, no sort); exact
-        # because shingles() emits distinct grams per doc. The bounded
-        # candidate list broadcasts, so only candidate docs' sets
-        # survive into the pair join map-side — no gram sort, no gram
-        # shuffle beyond the one aggregation. Set sizes come free from
-        # the arrays (no separate size-lookup joins).
-        sets = grams.groupBy(id_col).agg(
-            F.collect_set("shingle").alias("__set"))
-        aa = sets.select(F.col(id_col).alias("id_a"),
-                         F.col("__set").alias("__sa"))
-        bb = sets.select(F.col(id_col).alias("id_b"),
-                         F.col("__set").alias("__sb"))
-        pairs = (aa.join(F.broadcast(candidates), "id_a")
-                 .join(bb, "id_b")
-                 .select("id_a", "id_b",
-                         F.size(F.array_intersect("__sa", "__sb"))
-                          .cast("long").alias("inter"),
-                         F.size("__sa").cast("long").alias("sz_a"),
-                         F.size("__sb").cast("long").alias("sz_b")))
-        uni = F.col("sz_a") + F.col("sz_b") - F.col("inter")
-        verified = (pairs
-                    .filter(_keep_ratio_ge(F.col("inter"), uni,
-                                           min_jaccard))
-                    .withColumn("jaccard",
-                                ratio(F.col("inter"), uni, 4)))
-        return verified.select("id_a", "id_b", "jaccard")
-    else:
-        # merge strategy. The shingle table must NEVER be the broadcast
-        # side of the verification join: its planning-time estimate
-        # (cached-relation stats) undersells the materialized size, and
-        # at 100x the fixture (25M string rows) the promoted broadcast
-        # OOMs the driver — found by a 100x scale-up run (SCALING.md).
-        # sort-merge spills to disk instead of holding a per-partition
-        # hash build in executor memory (32 concurrent local tasks x a
-        # misestimated build side OOMed shuffle_hash too).
-        a = grams.select(F.col(id_col).alias("id_a"), "shingle").hint("merge")
-        b = grams.select(F.col(id_col).alias("id_b"), "shingle").hint("merge")
-        inter = (candidates.join(a, "id_a").join(b, ["id_b", "shingle"])
-                 .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("inter")))
-    sizes = sig.select(F.col(id_col), F.col("sz"))
-    sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    # per-doc shingle sets: one shuffle (hash agg, no sort); exact
+    # because shingles() emits distinct grams per doc. The bounded
+    # candidate list broadcasts, so only candidate docs' sets
+    # survive into the pair join map-side — no gram sort, no gram
+    # shuffle beyond the one aggregation. Set sizes come free from
+    # the arrays (no separate size-lookup joins).
+    sets = grams.groupBy(id_col).agg(
+        F.collect_set("shingle").alias("__set"))
+    aa = sets.select(F.col(id_col).alias("id_a"),
+                     F.col("__set").alias("__sa"))
+    bb = sets.select(F.col(id_col).alias("id_b"),
+                     F.col("__set").alias("__sb"))
+    pairs = (aa.join(F.broadcast(candidates), "id_a")
+             .join(bb, "id_b")
+             .select("id_a", "id_b",
+                     F.size(F.array_intersect("__sa", "__sb"))
+                      .cast("long").alias("inter"),
+                     F.size("__sa").cast("long").alias("sz_a"),
+                     F.size("__sb").cast("long").alias("sz_b")))
     uni = F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    verified = (inter.join(F.broadcast(sz_a), "id_a").join(F.broadcast(sz_b), "id_b")
+    verified = (pairs
                 .filter(_keep_ratio_ge(F.col("inter"), uni, min_jaccard))
                 .withColumn("jaccard", ratio(F.col("inter"), uni, 4)))
     return verified.select("id_a", "id_b", "jaccard")
@@ -1114,8 +1043,8 @@ def gram_positions(df: DataFrame, k: int = 8, id_col: str = "doc_id",
 
 
 def duplicated_spans(df: DataFrame, k: int = 8, min_df: int = 2,
-                     id_col: str = "doc_id", text_col: str = "text",
-                     hash_grams: bool = True) -> DataFrame:
+                     id_col: str = "doc_id",
+                     text_col: str = "text") -> DataFrame:
     """Cross-document duplicated substring spans — the ExactSubstr dedup
     of Lee et al. 2022 ("Deduplicating Training Data Makes Language
     Models Better") re-expressed for Spark at k-token resolution.
@@ -1127,12 +1056,12 @@ def duplicated_spans(df: DataFrame, k: int = 8, min_df: int = 2,
 
     1. `gram_positions`: (doc, pos, k-gram) — narrow, corpus-linear.
     2. gram -> distinct-doc frequency; grams in >= `min_df` docs are
-       duplicated. One shuffle keyed by gram (xxhash64(gram) when
-       `hash_grams`, so the exchange carries 8-byte uniform keys, not
-       text). A span repeated in >= min_df docs is exactly a maximal run
-       of duplicated k-grams, so no information is lost vs the suffix
-       array down to resolution k (spans shorter than k are invisible —
-       the paper's own dedup threshold, 50 BPE tokens, plays this role).
+       duplicated. One shuffle keyed by xxhash64(gram), so the exchange
+       carries 8-byte uniform keys, not text. A span repeated in >=
+       min_df docs is exactly a maximal run of duplicated k-grams, so no
+       information is lost vs the suffix array down to resolution k
+       (spans shorter than k are invisible — the paper's own dedup
+       threshold, 50 BPE tokens, plays this role).
     3. join positions back to duplicated grams (same uniform key; fan-out
        is |dup positions|, linear — never pairwise, unlike Jaccard).
     4. per-doc interval merge of [pos, pos+k-1] windows: running
@@ -1142,16 +1071,11 @@ def duplicated_spans(df: DataFrame, k: int = 8, min_df: int = 2,
        region. Partitioned by doc, narrow after one shuffle.
 
     Returns (doc_id, span_start, span_tokens), one row per maximal
-    duplicated span. `hash_grams=True` is the production exchange (the
-    64-bit digest has ~1e-9 corpus-level collision odds, which would
-    only over-mark a span); False keeps gram text for exact parity —
-    both produce identical output on any real corpus, and the DuckDB
-    oracle checks the hashed variant directly since grams never appear
-    in the output."""
+    duplicated span. The 64-bit digest has ~1e-9 corpus-level collision
+    odds, which would only over-mark a span; the DuckDB oracle checks
+    the hashed key directly since grams never appear in the output."""
     g = gram_positions(df, k=k, id_col=id_col, text_col=text_col)
-    key = F.xxhash64("gram").alias("gkey") if hash_grams \
-        else F.col("gram").alias("gkey")
-    g = g.select(id_col, "pos", key)
+    g = g.select(id_col, "pos", F.xxhash64("gram").alias("gkey"))
     if min_df == 2:
         # Default path: "gram in >= 2 distinct docs" is exactly
         # min(doc) != max(doc) over the gram partition — ONE exchange on

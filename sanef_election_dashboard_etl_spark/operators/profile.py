@@ -12,9 +12,7 @@ simultaneously (count/nulls/exact-distinct/min/max as a single wide agg —
 Spark plans the distincts via one expand + partial aggs, still one scan of
 the table), then a `stack` unpivot reshapes the single result row into one
 row per column. No per-column jobs, no driver-side loops; cost is the one
-scan regardless of column count. For very-high-cardinality columns where
-exact distinct's expand shuffle hurts, `approx=True` swaps in HLL
-approx_count_distinct (narrower, one partial agg, documented estimate).
+scan regardless of column count.
 """
 
 from __future__ import annotations
@@ -25,8 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def profile(df: DataFrame, cols: Sequence[str] | None = None,
-            approx: bool = False) -> DataFrame:
+def profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """Per-column profile in one scan:
     (column_name, n_rows, n_nulls, n_distinct, min_value, max_value).
 
@@ -37,13 +34,11 @@ def profile(df: DataFrame, cols: Sequence[str] | None = None,
     matters — Spark and SQL engines disagree on trailing fractional
     zeros)."""
     cols = list(cols or df.columns)
-    nd = (lambda c: F.approx_count_distinct(c)) if approx \
-        else (lambda c: F.count_distinct(F.col(c)))
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         aggs += [
             F.count(F.col(c)).alias(f"__nn_{c}"),
-            nd(c).alias(f"__nd_{c}"),
+            F.count_distinct(F.col(c)).alias(f"__nd_{c}"),
             F.min(F.col(c)).cast("string").alias(f"__mn_{c}"),
             F.max(F.col(c)).cast("string").alias(f"__mx_{c}"),
         ]

@@ -176,8 +176,8 @@ def ann_topk(emb: DataFrame, queries: DataFrame, k: int = 10, dim: int = 64,
 def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 10, dim: int = 64,
              n_planes: int | None = None, n_tables: int = 4, seed: int = 42,
              multiprobe: int = 1, target_bucket_size: int = 64,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             _return_candidates: bool = False) -> DataFrame:
+             id_col: str = "vec_id",
+             vec_col: str = "embedding") -> DataFrame:
     """Approximate top-k: bucket corpus + queries by random-hyperplane
     signature, score only same-bucket candidates.
 
@@ -235,8 +235,6 @@ def lsh_topk(emb: DataFrame, queries: DataFrame, k: int = 10, dim: int = 64,
         cands = ct if cands is None else cands.unionByName(ct)
     cands = (cands.filter(F.col("neighbor_id") != F.col("query_id"))
              .distinct())
-    if _return_candidates:
-        return cands
 
     scored = (cands.join(c, "neighbor_id").join(F.broadcast(q), "query_id")
               .withColumn("cos", dot(F.col("qv"), F.col("cv")) /
@@ -274,8 +272,8 @@ def hamming_distance(a: Column, b: Column) -> Column:
 def hamming_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
                  dim: int = 64, n_bits: int = 120, radius: int | None = None,
                  seed: int = 42, use_arrow: bool = False,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 _return_candidates: bool = False) -> DataFrame:
+                 id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> DataFrame:
     """Approximate top-k via a wide-signature Hamming PRE-FILTER: score a
     corpus vector exactly only if its `n_bits`-plane sign signature is
     within `radius` bits of the query's.
@@ -340,8 +338,6 @@ def hamming_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     cond = ((F.col("neighbor_id") != F.col("query_id")) &
             (hamming_distance(F.col("cs"), F.col("qs")) <= F.lit(radius)))
     cands = c.join(F.broadcast(q), cond)
-    if _return_candidates:
-        return cands.select("query_id", "neighbor_id")
 
     scored = cands.withColumn("cos", dot(F.col("qv"), F.col("cv")) /
                               (F.col("qn") * F.col("cn")))
@@ -472,8 +468,8 @@ def dim_of(emb: DataFrame, vec_col: str = "embedding") -> int:
 def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
              n_centroids: int = 16, n_probe: int = 8, seed: int = 42,
              max_iter: int = 8,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             _return_candidates: bool = False) -> DataFrame:
+             id_col: str = "vec_id",
+             vec_col: str = "embedding") -> DataFrame:
     """IVF (inverted-file) approximate top-k: cluster the corpus with
     k-means (Spark ML), assign each vector to its nearest centroid, and
     score each query only against its `n_probe` nearest centroids' lists.
@@ -530,8 +526,6 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
 
     cands = (assigned.join(F.broadcast(probes), "centroid")
              .filter(F.col("neighbor_id") != F.col("query_id")))
-    if _return_candidates:
-        return cands.select("query_id", "neighbor_id")
     scored = cands.withColumn("cos", dot(F.col("qv"), F.col("cv")) /
                               (F.col("qn") * F.col("cn")))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))

@@ -638,8 +638,8 @@ def quality_classifier(df: DataFrame, dim: int = 256,
 
 def ccnet_buckets(df: DataFrame, n_buckets: int = 3,
                   id_col: str = "doc_id", text_col: str = "text",
-                  lang_col: str = "lang", exact_window: bool = False,
-                  checkpoint: str = "local") -> DataFrame:
+                  lang_col: str = "lang",
+                  exact_window: bool = False) -> DataFrame:
     """CCNet-style head/middle/tail corpus partitioning: score every
     doc with the self-fit bigram LM (lm_cross_entropy), then cut each
     language into `n_buckets` equal-population perplexity tertiles —
@@ -663,8 +663,7 @@ def ccnet_buckets(df: DataFrame, n_buckets: int = 3,
     two token-level aggregations; the DEFAULT bucketing is the
     DISTRIBUTED exact ntile — one range-repartition on
     (lang, cross_entropy, id) through layout.global_row_number (the
-    scalable zipWithIndex; `checkpoint` passes through its
-    local/reliable/persist durability tiers), a languages-sized
+    scalable zipWithIndex), a languages-sized
     (count, first-rank) aggregate broadcast back, and the closed-form
     ntile `((rank-1) * n) DIV total + 1` in pure integer arithmetic —
     provably identical to SQL NTILE for a total order (the first
@@ -685,8 +684,7 @@ def ccnet_buckets(df: DataFrame, n_buckets: int = 3,
     else:
         from .layout import global_row_number
         gn = global_row_number(scored,
-                               [lang_col, "cross_entropy", id_col],
-                               checkpoint=checkpoint)
+                               [lang_col, "cross_entropy", id_col])
         per_lang = gn.groupBy(lang_col).agg(
             F.count(F.lit(1)).alias("__n"),
             F.min("global_id").alias("__s"))
@@ -871,7 +869,7 @@ def dsir_log_ratio(df: DataFrame, target: DataFrame, tau: float = 0.0,
 def bm25_topk(df: DataFrame, queries: DataFrame, k: int = 10,
               k1: float = 1.2, b: float = 0.75,
               id_col: str = "doc_id", text_col: str = "text",
-              persist_index: bool = True, mode: str = "index") -> DataFrame:
+              mode: str = "index") -> DataFrame:
     """BM25 top-k retrieval over the corpus (Robertson-Sparck Jones
     Okapi weighting) — the keyword-retrieval step data-curation loops
     use to pull topical documents out of a crawl (and the lexical half
@@ -945,8 +943,7 @@ def bm25_topk(df: DataFrame, queries: DataFrame, k: int = 10,
         raise ValueError(
             f"bm25_topk: unknown mode {mode!r} (expected 'index' or 'scan')")
     if mode == "scan":
-        return _bm25_topk_scan(df, queries, k, k1, b, id_col, text_col,
-                               persist_index)
+        return _bm25_topk_scan(df, queries, k, k1, b, id_col, text_col)
 
     # r11 (guide §2.4): dl (per-doc token count) is a PER-ROW expression
     # on documents, not a post-index aggregate — computing it on the way
@@ -991,15 +988,14 @@ def bm25_topk(df: DataFrame, queries: DataFrame, k: int = 10,
     # AQE's stage reuse does not collapse them (measured r8: the
     # duplicated explode+aggregate subtrees were the dominant cost and
     # the rep-to-rep spread of sim_hybrid_rrf).
-    # persist_index materializes it once per action —
-    # the production retrieval architecture anyway: at 100 TB the index
-    # is BUILT once and persisted (a table, not a per-query subplan);
-    # queries join against it. Lazy persist: the first action populates
-    # it inside its own wall-clock (bench clearCache-per-rep re-measures
-    # the build each rep; no eager job is hidden off the clock).
-    if persist_index:
-        from pyspark import StorageLevel
-        tf = scoped_persist(tf, StorageLevel.MEMORY_AND_DISK)
+    # Persisting materializes it once per action — the production
+    # retrieval architecture anyway: at 100 TB the index is BUILT once
+    # and persisted (a table, not a per-query subplan); queries join
+    # against it. Lazy persist: the first action populates it inside its
+    # own wall-clock (bench clearCache-per-rep re-measures the build each
+    # rep; no eager job is hidden off the clock).
+    from pyspark import StorageLevel
+    tf = scoped_persist(tf, StorageLevel.MEMORY_AND_DISK)
     # total_tokens = SUM(tf) over the index — same value as the old
     # SUM over the per-doc dl rollup (r8, VERDICT r7 item 4: derived
     # from the tf aggregate instead of a second full corpus explode),
@@ -1064,8 +1060,7 @@ def _bm25_score_topk(matched: DataFrame, dfreq: DataFrame,
 
 def _bm25_topk_scan(df: DataFrame, queries: DataFrame, k: int,
                     k1: float, b: float,
-                    id_col: str, text_col: str,
-                    persist_index: bool = True) -> DataFrame:
+                    id_col: str, text_col: str) -> DataFrame:
     """bm25_topk mode="scan" body — see the dispatcher docstring.
 
     Plan: documents scan -> BroadcastNestedLoopJoin(array_contains)
@@ -1099,11 +1094,6 @@ def _bm25_topk_scan(df: DataFrame, queries: DataFrame, k: int,
     # path persists tf for). The cached relation is o(|matches|) rows
     # of integers. Cache lifecycle caveat: lives until
     # clearCache/unpersist, like bm25's persisted tf index.
-    # persist_index=False threads through from the dispatcher (ADVICE
-    # r9 — it used to be silently ignored here): opting out accepts
-    # TWO full array_contains sweeps over the corpus per action (dfreq
-    # + score both re-expand the broadcast join subtree), for callers
-    # that manage caching themselves or run strictly once.
     from pyspark import StorageLevel
 
     matched = (base.join(
@@ -1115,8 +1105,7 @@ def _bm25_topk_scan(df: DataFrame, queries: DataFrame, k: int,
                 "__toks", lambda x: x == F.col("token"))).cast("long")
             .alias("tf"),
             F.size("__toks").cast("long").alias("dl")))
-    if persist_index:
-        matched = scoped_persist(matched, StorageLevel.MEMORY_AND_DISK)
+    matched = scoped_persist(matched, StorageLevel.MEMORY_AND_DISK)
     dfreq = (matched.select("token", id_col).distinct()
              .groupBy("token").agg(F.count(F.lit(1)).alias("df_docs")))
     return _bm25_score_topk(matched, dfreq, stats, k, k1, b, id_col)
@@ -1274,8 +1263,7 @@ def bpe_encode(df: DataFrame, merges: list, id_col: str = "doc_id",
 
 
 def bpe_encode_distinct(df: DataFrame, merges: list, id_col: str = "doc_id",
-                        text_col: str = "text",
-                        huge_vocab: bool = False) -> DataFrame:
+                        text_col: str = "text") -> DataFrame:
     """bpe_encode via DISTINCT-WORD pre-aggregation (r9, VERDICT r8
     item 8) — the standard production shape at 100 TB: segment each
     distinct word ONCE (the only Python stage, sized by corpus
@@ -1318,16 +1306,11 @@ def bpe_encode_distinct(df: DataFrame, merges: list, id_col: str = "doc_id",
     enc = uw.mapInPandas(
         enc_words, schema="__w string, __pieces array<string>")
     # The piece table is vocab-sized; BROADCAST it into the token join
-    # by default (r10 plan-audit catch: without the hint the join
-    # planned sort-merge, shuffling the corpus tokens on the word key
-    # on top of the regroup exchange they already pay — Spark has no
-    # stats for a mapInPandas output). huge_vocab=True opts out for
-    # corpora whose word->pieces table exceeds broadcast budget
-    # (~10^8 distinct words); there the regroup exchange remains and
-    # AQE picks the join strategy from runtime sizes.
-    if not huge_vocab:
-        enc = F.broadcast(enc)
-    per_doc = (toks.join(enc, "__w")
+    # (r10 plan-audit catch: without the hint the join planned
+    # sort-merge, shuffling the corpus tokens on the word key on top of
+    # the regroup exchange they already pay — Spark has no stats for a
+    # mapInPandas output).
+    per_doc = (toks.join(F.broadcast(enc), "__w")
                .groupBy(id_col)
                .agg(F.flatten(F.transform(
                    F.array_sort(F.collect_list(

@@ -22,7 +22,7 @@ SQL-checkable query covering the same semantics where possible.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -50,7 +50,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Query:
     fn: QueryFn
     oracle: str | None
-    tags: tuple[str, ...] = field(default_factory=tuple)
     # Every rows-only entry (oracle=None) MUST name an oracle-checked
     # registry sibling that hash-verifies the same semantics family —
     # the CLAUDE.md rule, machine-checked by
@@ -71,7 +70,7 @@ class Query:
 REGISTRY: dict[str, Query] = {}
 
 
-def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = (),
+def query(name: str, oracle: str | None = None,
           sibling: str | None = None, band_oracle: str | None = None,
           band_eps: float = 0.0):
     def deco(fn: QueryFn) -> QueryFn:
@@ -79,7 +78,7 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = (),
             tune(spark)
             return fn(spark, sf_dir)
 
-        REGISTRY[name] = Query(wrapped, oracle, tags, sibling,
+        REGISTRY[name] = Query(wrapped, oracle, sibling,
                                band_oracle, band_eps)
         return wrapped
 
@@ -999,7 +998,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     return D.ngram_jaccard_pairs(docs, n=3, min_jaccard=0.05)
 
 
-@query("dedup_minhash_lsh", oracle=None, tags=("rows-only",),
+@query("dedup_minhash_lsh", oracle=None,
        sibling="dedup_minhash_lsh_portable")
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash+LSH near-dup pairs (scale path; xxhash64-based signatures
@@ -1014,7 +1013,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     return D.minhash_lsh_pairs(docs, n=3, k=32, bands=8, min_jaccard=0.5)
 
 
-@query("dedup_simhash", oracle=None, tags=("rows-only",),
+@query("dedup_simhash", oracle=None,
        sibling="dedup_simhash_portable")
 def dedup_simhash(spark, sf_dir):
     """SimHash near-dup pairs (Hamming<=3 via 16-bit-chunk banding)."""
@@ -1065,7 +1064,7 @@ def sim_cosine_pairs(spark, sf_dir):
     return S.cosine_pairs(emb, min_cosine=0.35)
 
 
-@query("sim_topk_lsh", oracle=None, tags=("rows-only",),
+@query("sim_topk_lsh", oracle=None,
        sibling="sim_topk_lsh_portable")
 def sim_topk_lsh(spark, sf_dir):
     """Random-hyperplane LSH top-k — the CURATED-CORPUS tier, not the
@@ -1175,7 +1174,7 @@ def sim_embedding_dup_pairs(spark, sf_dir):
     return S.embedding_dup_pairs(emb.unionByName(dup))
 
 
-@query("sim_topk_hamming_arrow", oracle=None, tags=("rows-only",),
+@query("sim_topk_hamming_arrow", oracle=None,
        sibling="sim_topk_hamming")
 def sim_topk_hamming_arrow(spark, sf_dir):
     """hamming_topk with Arrow (numpy-matmul) signature computation —
@@ -2491,7 +2490,7 @@ def e11_null_handling(spark, sf_dir):
          .otherwise(0).alias("is_zero"))
 
 
-@query("sim_topk_ivf", oracle=None, tags=("rows-only",),
+@query("sim_topk_ivf", oracle=None,
        sibling="sim_topk_cosine")
 def sim_topk_ivf(spark, sf_dir):
     """IVF approximate top-k (k-means partitioned corpus, n_probe nearest
@@ -2502,7 +2501,7 @@ def sim_topk_ivf(spark, sf_dir):
                       n_centroids=8, n_probe=3)
 
 
-@query("text_winnow_fingerprint_pairs", oracle=None, tags=("rows-only",),
+@query("text_winnow_fingerprint_pairs", oracle=None,
        sibling="dedup_ngram_jaccard")
 def text_winnow_fingerprint_pairs(spark, sf_dir):
     """Winnowing (rolling-hash) fingerprint candidate pairs — MOSS-style
@@ -3101,7 +3100,7 @@ def sample_stratified(spark, sf_dir):
         {"en": 0.20, "de": 0.50}, default_rate=0.05).select("doc_id", "lang")
 
 
-@query("sim_topk_cosine_pandas", oracle=None, tags=("rows-only",),
+@query("sim_topk_cosine_pandas", oracle=None,
        sibling="sim_topk_cosine")
 def sim_topk_cosine_pandas(spark, sf_dir):
     """Vectorized pandas-UDF cosine top-k (numpy matmul per Arrow batch) —
@@ -3794,7 +3793,7 @@ def sketch_heavy_hitters(spark, sf_dir):
     return SK.heavy_hitters_fraction(tok, "token", num=1, den=50)
 
 
-@query("sketch_cms_fast", oracle=None, tags=("rows-only",),
+@query("sketch_cms_fast", oracle=None,
        sibling="sketch_cms_tokens")
 def sketch_cms_fast(spark, sf_dir):
     """Production CMS path: xxhash64 (no md5 round trip) — ~2x faster,
@@ -3806,7 +3805,7 @@ def sketch_cms_fast(spark, sf_dir):
     return SK.cms_estimate(sk, probes, "token", depth=4, width=256)
 
 
-@query("sketch_hll_shard_merge", oracle=None, tags=("rows-only",),
+@query("sketch_hll_shard_merge", oracle=None,
        sibling="a13_count_distinct", band_eps=0.05, band_oracle="""
     SELECT event_type AS shard,
            CAST(COUNT(DISTINCT user_id) AS DOUBLE) AS est_distinct,
@@ -5542,7 +5541,7 @@ def sim_decontaminate(spark, sf_dir):
                                     min_cosine=0.35)
 
 
-@query("text_compression_ratio", oracle=None, tags=("rows-only",),
+@query("text_compression_ratio", oracle=None,
        sibling="text_repetition_ratio")
 def text_compression_ratio(spark, sf_dir):
     """Per-doc zlib compression ratio (text.compression_ratio) — the
@@ -5553,7 +5552,7 @@ def text_compression_ratio(spark, sf_dir):
     return T.compression_ratio(_t(spark, sf_dir, "documents"))
 
 
-@query("sim_semantic_dedup_kmeans", oracle=None, tags=("rows-only",),
+@query("sim_semantic_dedup_kmeans", oracle=None,
        sibling="sim_semantic_dedup")
 def sim_semantic_dedup_kmeans(spark, sf_dir):
     """semantic_dedup with learned k-means clusters (Spark ML) — the
@@ -6134,7 +6133,7 @@ def text_fertility_by_lang(spark, sf_dir):
                         F.col("n_words").cast("double")))
 
 
-@query("pack_ffd", oracle=None, tags=("rows-only",),
+@query("pack_ffd", oracle=None,
        sibling="pack_sequences")
 def pack_ffd(spark, sf_dir):
     """First-Fit-Decreasing packing (Arrow grouped-map tier): tighter
@@ -8008,7 +8007,7 @@ def sample_temperature_mixture(spark, sf_dir):
                                budget_tokens=5000, alpha=0.5)
 
 
-@query("sim_topk_pq", oracle=None, tags=("rows-only",),
+@query("sim_topk_pq", oracle=None,
        sibling="sim_topk_quantized")
 def sim_topk_pq(spark, sf_dir):
     """Product-quantization top-k with exact rerank (similarity.pq_topk,
@@ -8022,7 +8021,7 @@ def sim_topk_pq(spark, sf_dir):
     return S.pq_topk(emb, emb.filter(F.col("vec_id") < 10), k=10)
 
 
-@query("sim_topk_pq_routed", oracle=None, tags=("rows-only",),
+@query("sim_topk_pq_routed", oracle=None,
        sibling="sim_topk_quantized")
 def sim_topk_pq_routed(spark, sf_dir):
     """The PQ auto-routing guard end-to-end (VERDICT r6 item 4):
@@ -8069,7 +8068,7 @@ def source_jsonl_roundtrip(spark, sf_dir):
     return read_jsonl(spark, path, schema).select("doc_id", "lang", "text")
 
 
-@query("sim_topk_ivf_pq", oracle=None, tags=("rows-only",),
+@query("sim_topk_ivf_pq", oracle=None,
        sibling="sim_topk_quantized")
 def sim_topk_ivf_pq(spark, sf_dir):
     """The full IVF-PQ stack (similarity.ivf_pq_topk, the faiss
@@ -8130,7 +8129,7 @@ def source_avro_roundtrip(spark, sf_dir):
     return read_avro(spark, path).filter(F.col("c_custkey") < 500)
 
 
-@query("text_bpe_tokenize", oracle=None, tags=("rows-only",),
+@query("text_bpe_tokenize", oracle=None,
        sibling="text_token_stats")
 def text_bpe_tokenize(spark, sf_dir):
     """Trained-BPE tokenization (text.bpe_train + bpe_encode, Sennrich
@@ -8156,7 +8155,7 @@ def text_bpe_tokenize(spark, sf_dir):
         F.array_join("bpe_tokens", " ").alias("bpe_text"))
 
 
-@query("text_bpe_encode_auto", oracle=None, tags=("rows-only",),
+@query("text_bpe_encode_auto", oracle=None,
        sibling="text_token_stats")
 def text_bpe_encode_auto(spark, sf_dir):
     """BPE tier auto-dispatch (r10, text.bpe_encode_auto): same trained
@@ -8611,7 +8610,7 @@ def profile_trend_ols(spark, sf_dir):
                      group_col="event_type", y_scale=2)
 
 
-@query("sim_hybrid_rrf_ann", oracle=None, tags=("rows-only",),
+@query("sim_hybrid_rrf_ann", oracle=None,
        sibling="sim_hybrid_rrf")
 def sim_hybrid_rrf_ann(spark, sf_dir):
     """The PRODUCTION hybrid-retrieval tier: same RRF fusion as

@@ -72,18 +72,16 @@ def multipart_form(path: str, meta: dict, boundary: str) -> bytes:
 
 
 def upload_http(path: str, endpoint: str, dataset_id: int, token: str,
-                overwrite: bool = True, update: bool = True,
                 poster=None) -> dict:
     """S9 adapter: multipart POST of the written file to the dashboard API
     (SANEF_Uploader.py:57-64) — a 'file' part plus update/overwrite form
     fields, exactly the body shape requests.post(data=, files=) produces
-    for the reference. The reference always posts
-    {'update': True, 'overwrite': True} (SANEF_Uploader.py:61) — the two
-    fields are independent parameters here so the defaults reproduce that
-    payload exactly. `poster` is injectable for tests; default uses
-    urllib so the engine adds no HTTP dependency."""
+    for the reference, which always posts
+    {'update': True, 'overwrite': True} (SANEF_Uploader.py:61).
+    `poster` is injectable for tests; default uses urllib so the engine
+    adds no HTTP dependency."""
     url = f"{endpoint}/api/v1/datasets/{dataset_id}/upload/"
-    meta = {"update": update, "overwrite": overwrite}
+    meta = {"update": True, "overwrite": True}
     if poster is not None:
         return poster(url, path, meta, token)
     import urllib.request
@@ -99,19 +97,13 @@ def upload_http(path: str, endpoint: str, dataset_id: int, token: str,
         return {"status": resp.status}
 
 
-def write_jsonl(df, path: str, n_files: int | None = None,
-                compression: str | None = None) -> None:
+def write_jsonl(df, path: str, n_files: int | None = None) -> None:
     """Export as JSONL (one JSON object per line) — the training-data
     interchange format consumers (tokenizer pipelines, data loaders)
     read directly. A plain distributed `.json()` write: every partition
     streams its own file, no driver funnel (the single-file CSV is a
     dashboard-upload contract; training export wants many files).
     `n_files` round-robin-repartitions for even file sizes (one narrow
-    exchange — use it when upstream partitioning is skewed);
-    `compression='gzip'` trades splittability for bytes, so prefer it
-    only for archival, not for re-ingest."""
+    exchange — use it when upstream partitioning is skewed)."""
     w = df.repartition(n_files) if n_files else df
-    writer = w.write.mode("overwrite")
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(path)
+    w.write.mode("overwrite").json(path)

@@ -28,28 +28,15 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return catalog.read_parquet(spark, path)
 
 
-def read_jsonl(spark: SparkSession, path: str, schema: StructType,
-               permissive: bool = False) -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """Schema-explicit JSONL (newline-delimited JSON) ingest — the
     interchange format training-data pipelines exchange corpora in.
     Same discipline as read_csv_dim: a DECLARED schema, because
     inference costs a full extra scan at 100 TB and silently widens
-    types between drops. FAILFAST by default (a dim/corpus load should
-    die loudly); `permissive=True` is the crawled-feed mode — malformed
-    lines land whole in `_corrupt_record` instead of killing the job,
-    mirroring the PERMISSIVE CSV path (COVERAGE.md corrupt-record row).
-    JSONL is splittable line-by-line, so a directory of .jsonl files
-    parallelizes like CSV; pair with sinks.write_jsonl for round-trip
-    export."""
-    from pyspark.sql.types import StringType
-
-    if permissive:
-        schema = StructType(list(schema.fields)).add(
-            "_corrupt_record", StringType())
-        return (spark.read.schema(schema)
-                .option("mode", "PERMISSIVE")
-                .option("columnNameOfCorruptRecord", "_corrupt_record")
-                .json(path))
+    types between drops, and FAILFAST (a corpus load should die
+    loudly). JSONL is splittable line-by-line, so a directory of .jsonl
+    files parallelizes like CSV; pair with sinks.write_jsonl for
+    round-trip export."""
     return (spark.read.schema(schema)
             .option("mode", "FAILFAST")
             .json(path))

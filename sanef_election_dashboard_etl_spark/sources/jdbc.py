@@ -10,29 +10,23 @@ Engine equivalents:
   clause (JDBCRelation pushdown), which also eliminates the reference's
   SQL-injection-by-concatenation pattern.
 - S4 (nested query):     re-expressed in DataFrame ops (plans/pipelines.py
-  `completed_wards`) so Catalyst decides what to push — option("query", ...)
-  stays available via `.query()` for pathological cases.
+  `completed_wards`) so Catalyst decides what to push.
 - S5 (agg pushdown):     DSv2 JDBC aggregate pushdown where the dialect
   supports it; otherwise Spark computes the aggregate after the scan —
   correct either way.
 
-Scale: `partition_on` splits the remote read into `num_partitions` range
-slices so a large fact table streams through all executors instead of one
-connection.
-
 Exercised END TO END over a real java.sql connection in
 tests/test_jdbc_and_stateful.py::test_jdbc_live_round_trip_derby using
 embedded Derby (the one JDBC driver that ships inside the Spark
-distribution): whole-table scan, predicate pushdown asserted in the
-physical plan (`PushedFilters: [GreaterThan(...)]`), raw-SQL query, and
-range-partitioned parallel read. SQL Server specifics (the reference's
-engine) remain covered by the option-contract tests — no sqlserver jar
-in this container.
+distribution): whole-table scan and predicate pushdown asserted in the
+physical plan (`PushedFilters: [GreaterThan(...)]`). SQL Server
+specifics (the reference's engine) remain covered by the option-contract
+tests — no sqlserver jar in this container.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -45,58 +39,22 @@ class JdbcSource:
     user: str | None = None
     password: str | None = None
     driver: str | None = None
-    fetchsize: int = 10_000
-    extra: dict[str, str] = field(default_factory=dict)
 
-    def _options(self) -> dict[str, str]:
-        opts = {"url": self.url, "fetchsize": str(self.fetchsize)}
+    def reader_options(self, dbtable: str) -> dict[str, str]:
+        """The exact option dict handed to spark.read.format('jdbc') —
+        exposed separately so tests can assert it without a driver."""
+        opts = {"url": self.url, "fetchsize": "10000"}
         if self.user is not None:
             opts["user"] = self.user
         if self.password is not None:
             opts["password"] = self.password
         if self.driver is not None:
             opts["driver"] = self.driver
-        opts.update(self.extra)
+        opts["dbtable"] = dbtable
         return opts
 
-    def reader_options(self, dbtable: str | None = None,
-                       query: str | None = None,
-                       partition_on: str | None = None,
-                       lower: int | None = None, upper: int | None = None,
-                       num_partitions: int | None = None) -> dict[str, str]:
-        """The exact option dict handed to spark.read.format('jdbc') —
-        exposed separately so tests can assert it without a driver."""
-        if (dbtable is None) == (query is None):
-            raise ValueError("exactly one of dbtable/query is required")
-        opts = self._options()
-        if dbtable is not None:
-            opts["dbtable"] = dbtable
-        else:
-            opts["query"] = query  # type: ignore[assignment]
-        if partition_on is not None:
-            if dbtable is None:
-                raise ValueError("partitioned reads require dbtable")
-            if lower is None or upper is None or num_partitions is None:
-                raise ValueError("partition_on requires lower/upper/num_partitions")
-            opts.update({
-                "partitionColumn": partition_on,
-                "lowerBound": str(lower),
-                "upperBound": str(upper),
-                "numPartitions": str(num_partitions),
-            })
-        return opts
-
-    def table(self, spark: SparkSession, dbtable: str,
-              partition_on: str | None = None, lower: int | None = None,
-              upper: int | None = None,
-              num_partitions: int | None = None) -> DataFrame:
+    def table(self, spark: SparkSession, dbtable: str) -> DataFrame:
         """S2/S3/S5: lazy scan of a remote table; chain .filter/.select and
         Catalyst pushes them down."""
-        opts = self.reader_options(dbtable, None, partition_on, lower, upper,
-                                   num_partitions)
-        return spark.read.format("jdbc").options(**opts).load()
-
-    def query(self, spark: SparkSession, sql: str) -> DataFrame:
-        """S4 escape hatch: ship a full SQL text to the remote engine."""
         return spark.read.format("jdbc") \
-            .options(**self.reader_options(query=sql)).load()
+            .options(**self.reader_options(dbtable)).load()

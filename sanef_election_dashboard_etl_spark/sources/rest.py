@@ -12,12 +12,13 @@ Inside each partition the requests overlap, as the reference's
 `MAX_IN_FLIGHT` requests at once over all fetch partitions
 (`max(1, MAX_IN_FLIGHT // n)` threads in each of `n` tasks), and rows
 keep their input order. The fetcher is therefore called from several
-threads at once and must be thread-safe. The two here are:
-`_default_fetcher` and `bearer_fetcher` open a new `urllib` connection
-per call (nothing is pooled or kept alive between URLs).
+threads at once and must be thread-safe. `bearer_fetcher` opens a new
+`urllib` connection per call (nothing is pooled or kept alive between
+URLs).
 
-The fetcher is injectable so tests (and the offline fixtures) substitute a
-deterministic local function for the network call — SURVEY.md §7 risk (a).
+Every caller passes its fetcher, so tests (and the offline fixtures)
+substitute a deterministic local function for the network call —
+SURVEY.md §7 risk (a).
 Error semantics: each URL's failure surfaces in that row's `error` column
 with a NULL payload, never silently swallowed (the reference
 prints-and-drops at :43-46, :377-379; SURVEY.md §5.2 non-goal)."""
@@ -41,20 +42,11 @@ Fetcher = Callable[[str], str]
 MAX_IN_FLIGHT = 64
 
 
-def _default_fetcher(url: str) -> str:
-    """Network fetcher, run on executors: every call opens its own
-    `urllib` connection (nothing is pooled or kept alive between URLs);
-    stdlib only."""
-    import urllib.request
-
-    with urllib.request.urlopen(url, timeout=30) as resp:  # noqa: S310
-        return resp.read().decode("utf-8")
-
-
 def bearer_fetcher(token: str) -> Fetcher:
     """Authenticated fetcher: every request carries
     ``Authorization: Bearer <token>`` (SANEF_Uploader.py:29, :41). The
-    closure ships the token to executors; stdlib-only like the default."""
+    closure ships the token to executors; stdlib only, and every call
+    opens its own `urllib` connection."""
     import urllib.request
 
     def fetch(url: str) -> str:
@@ -67,7 +59,7 @@ def bearer_fetcher(token: str) -> Fetcher:
 
 
 def fetch_json(params: DataFrame, url_col: str, payload_schema: StructType,
-               fetcher: Fetcher | None = None,
+               fetcher: Fetcher,
                parallelism: int | None = None) -> DataFrame:
     """Fan-out fetch: params (one row per request) -> (params..., payload).
 
@@ -79,14 +71,13 @@ def fetch_json(params: DataFrame, url_col: str, payload_schema: StructType,
     columns + `payload` (struct) + `error`, in input order per partition;
     a URL whose fetch raised has a NULL payload and its error text.
     """
-    f = fetcher or _default_fetcher
     n = parallelism or params.sparkSession.sparkContext.defaultParallelism
     threads = max(1, MAX_IN_FLIGHT // n)
     cols = params.columns
 
     def attempt(url: str) -> tuple[str | None, str | None]:
         try:
-            return f(url), None
+            return fetcher(url), None
         except Exception as exc:  # surface, don't swallow
             return None, f"{type(exc).__name__}: {exc}"
 
@@ -115,7 +106,7 @@ class RestSource:
 
     url_template: str
     payload_schema: StructType
-    fetcher: Fetcher | None = None
+    fetcher: Fetcher
 
     def fetch(self, keys: DataFrame, key_col: str) -> DataFrame:
         params = keys.withColumn(

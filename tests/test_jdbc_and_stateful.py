@@ -1,10 +1,8 @@
 """JDBC tests — option contracts for the SQL Server production shape, a
 LIVE end-to-end round trip over embedded Derby (the JDBC driver that
-ships inside the Spark distribution itself, so S2-S5 traverse a real
+ships inside the Spark distribution itself, so S2-S3 traverse a real
 java.sql connection), and the applyInPandasWithState streaming round
 trip."""
-
-import pytest
 
 from sanef_election_dashboard_etl_spark.sources.jdbc import JdbcSource
 
@@ -21,31 +19,12 @@ def test_jdbc_table_options():
     assert opts["fetchsize"] == "10000"
 
 
-def test_jdbc_partitioned_read_options():
-    opts = _src().reader_options(dbtable="LED_GIS_CouncilWinners",
-                                 partition_on="pklCouncilWinnerID",
-                                 lower=0, upper=1_000_000, num_partitions=64)
-    assert opts["partitionColumn"] == "pklCouncilWinnerID"
-    assert opts["numPartitions"] == "64"
-
-
-def test_jdbc_option_validation():
-    with pytest.raises(ValueError):
-        _src().reader_options()
-    with pytest.raises(ValueError):
-        _src().reader_options(dbtable="t", query="SELECT 1")
-    with pytest.raises(ValueError):
-        _src().reader_options(dbtable="t", partition_on="id")
-
-
-
 def test_jdbc_live_round_trip_derby(spark, tmp_path):
-    """S2-S4 + partitioned read over a real JDBC connection (embedded
-    Derby — org.apache.derby ships in pyspark/jars, no network needed).
-    Covers the reference's whole data-access surface shape
-    (SANEF_Uploader.py:112, :208, :385-401): whole-table scan, predicate
-    pushdown into the remote WHERE (asserted in the physical plan),
-    raw-SQL query, and range-partitioned parallel read."""
+    """S2-S3 over a real JDBC connection (embedded Derby —
+    org.apache.derby ships in pyspark/jars, no network needed): the
+    reference's data-access shape (SANEF_Uploader.py:112, :208,
+    :385-401) as a whole-table scan and predicate pushdown into the
+    remote WHERE (asserted in the physical plan)."""
     url = f"jdbc:derby:{tmp_path}/led;create=true"
     drv = "org.apache.derby.jdbc.EmbeddedDriver"
     spark.createDataFrame(
@@ -64,17 +43,6 @@ def test_jdbc_live_round_trip_derby(spark, tmp_path):
     assert sorted(tuple(r) for r in flt.collect()) == [(2, "b"), (3, "c")]
     plan = flt._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "GreaterThan(val,15)" in plan
-
-    # S4: remote-evaluated SQL text (Derby needs quoted lowercase idents)
-    q = src.query(spark,
-                  'SELECT "id", "val"*2 AS v2 FROM people WHERE "id" <= 2')
-    assert sorted(tuple(r) for r in q.collect()) == [(1, 20), (2, 40)]
-
-    # scale shape: range-partitioned read fans the scan across executors
-    part = src.table(spark, "people", partition_on='"id"',
-                     lower=1, upper=3, num_partitions=2)
-    assert part.rdd.getNumPartitions() == 2
-    assert part.count() == 3
 
 
 def test_stateful_running_totals_across_batches(spark, tmp_path):

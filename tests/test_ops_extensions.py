@@ -678,7 +678,7 @@ def test_weighted_sample_biases_toward_heavy_rows(spark):
     assert got == again
 
 
-def test_multimodal_resize_and_frame_sample(spark, docs):
+def test_multimodal_frame_sample(spark, docs):
     media = M.synthesize_media(docs)
     frames = M.sample_frames(media, every_n=10, max_frames=4).collect()
     by_id = {}
@@ -1222,25 +1222,6 @@ def test_ann_topk_routes_to_hamming_default(spark, vecs):
     assert a == h and len(a) > 0
 
 
-def test_minhash_verify_strategies_identical(spark):
-    # VERDICT r3 item 6: the r4 "sets" verification (array_intersect on
-    # per-doc shingle sets) must produce bit-identical pairs+jaccard to
-    # the r3 "merge" shape (gram-table sort-merge expansion)
-    rows_ = [(i, ("alpha beta gamma delta epsilon zeta eta " * 3) +
-              (f"tail{i % 7} " * 4)) for i in range(60)]
-    df = spark.createDataFrame(rows_, "doc_id long, text string")
-    a = sorted(map(tuple, D.minhash_lsh_pairs(
-        df, n=3, k=16, bands=4, min_jaccard=0.3, verify="sets").collect()))
-    b = sorted(map(tuple, D.minhash_lsh_pairs(
-        df, n=3, k=16, bands=4, min_jaccard=0.3, verify="merge").collect()))
-    assert a == b and len(a) > 0
-    # the estimate prefilter must not drop any true pair here either
-    c = sorted(map(tuple, D.minhash_lsh_pairs(
-        df, n=3, k=16, bands=4, min_jaccard=0.3, verify="sets",
-        prefilter_margin=0.3).collect()))
-    assert c == a
-
-
 def test_fingerprint_loose_collapses_punctuation(spark):
     df = spark.createDataFrame(
         [(1, "Hello, world!"), (2, "hello   WORLD"), (3, "hello world?!"),
@@ -1483,12 +1464,6 @@ def test_duplicated_spans_merges_overlapping_windows(spark):
     assert got[2] == [(0, 21)]
 
 
-def test_duplicated_spans_hash_and_string_grams_agree(spark, span_docs):
-    hashed = rows(D.duplicated_spans(span_docs, k=8, hash_grams=True))
-    plain = rows(D.duplicated_spans(span_docs, k=8, hash_grams=False))
-    assert hashed == plain
-
-
 def test_duplicated_span_stats_covers_every_doc(spark, span_docs):
     got = {r[0]: r[1:] for r in rows(D.duplicated_span_stats(
         span_docs, k=8))}
@@ -1663,10 +1638,6 @@ def test_profile_one_pass_stats_with_nulls(spark):
     assert got["k"] == (4, 0, 3, "1", "3")
     assert got["s"] == (4, 1, 2, "a", "b")
     assert got["v"] == (4, 1, 2, "10.0", "30.0")
-    # approx tier keeps schema and exactness at this tiny cardinality
-    a = {r["column_name"]: r["n_distinct"]
-         for r in profile(df, approx=True).collect()}
-    assert a["k"] == 3
 
 
 def test_profile_is_one_job_one_scan(spark):
@@ -1741,13 +1712,6 @@ def test_global_row_number_matches_serial_numbering(spark):
         got = {(r["k"], r["uniq"]): r["global_id"] for r in out}
         serial = sorted(rows)
         assert all(got[kv] == i + 1 for i, kv in enumerate(serial)), n_parts
-    # the durability tiers (ADVICE r4) produce identical numbering
-    per = L.global_row_number(df, ["k", "uniq"], num_partitions=5,
-                              checkpoint="persist").collect()
-    assert sorted(r["global_id"] for r in per) == list(range(1, 1001))
-    assert {(r["k"], r["uniq"]): r["global_id"] for r in per} == got
-    with pytest.raises(ValueError):
-        L.global_row_number(df, ["k", "uniq"], checkpoint="bogus")
 
 
 def test_epoch_shuffle_seeded_permutations(spark):

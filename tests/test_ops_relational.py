@@ -92,7 +92,7 @@ def test_stack_k_multiplies_rows(spark):
     assert out.count() == 14
 
 
-def test_window_total_and_topk(spark):
+def test_window_total(spark):
     df = spark.createDataFrame([("a", 1), ("a", 2), ("b", 3)], "g string, v int")
     tot = R.window_total(df, F.col("v"), "t")
     assert set(r["t"] for r in tot.collect()) == {6}

@@ -1,9 +1,5 @@
 """UDF-tier operator tests (operators/pandas_ops.py)."""
 
-import math
-
-import pyspark.sql.functions as F
-
 from sanef_election_dashboard_etl_spark.operators.pandas_ops import tokens_per_char
 
 

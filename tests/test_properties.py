@@ -2,7 +2,6 @@
 inputs: algebraic invariants the reference semantics imply."""
 
 import pyspark.sql.functions as F
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 

@@ -1,5 +1,6 @@
-"""Every public top-level function and class in the package must be reached
-from a real entry point, not only from its own test.
+"""Every public top-level function and class in the package, and every
+method of a public class, must be reached from a real entry point, not only
+from its own test.
 
 The scan is a static `ast` walk. Its roots are the `@query` registry
 functions, module-level code of every package module (which takes in
@@ -9,6 +10,14 @@ functions, module-level code of every package module (which takes in
 keyed by (module, name) so that `queries.pack_efficiency` calling
 `PK.pack_efficiency` does not keep a dead `packing.pack_efficiency` alive
 through the shared bare name. `tests/` is never a root.
+
+Methods are matched by name, since the scan knows no types: a method is
+reached when a reached definition or a root calls `.<name>(...)`, or
+names `self.<name>` / `cls.<name>`. A bare `x.<name>` read does not
+count: attribute names such as `query` are too common (perfbench reads
+`urlsplit(url).query`). Only a reached method's body counts as a
+reference; dunders count with their class. Spark calls the methods of an
+`F.udtf` class itself, so those classes are roots.
 
 Run `python tests/test_reachability.py` to print the unreached names.
 """
@@ -43,6 +52,46 @@ class _Module:
         self.defs = {n.name: n for n in self.tree.body
                      if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
                                        ast.ClassDef))}
+        # "Class.method" -> node, dunders left out (they go with the class)
+        self.methods = {f"{c.name}.{f.name}": f
+                        for c in self.defs.values()
+                        if isinstance(c, ast.ClassDef)
+                        for f in c.body if _is_method(f)}
+
+
+def _is_method(node) -> bool:
+    return (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and not (node.name.startswith("__") and node.name.endswith("__")))
+
+
+def _body(node) -> list[ast.AST]:
+    """What a def references when it is reached: a class without the
+    bodies of its methods (only the decorators and defaults those
+    evaluate at class creation)."""
+    if not isinstance(node, ast.ClassDef):
+        return [node]
+    out: list[ast.AST] = node.decorator_list + node.bases + node.keywords
+    for stmt in node.body:
+        if _is_method(stmt):
+            out += stmt.decorator_list + stmt.args.defaults + [
+                d for d in stmt.args.kw_defaults if d is not None]
+        else:
+            out.append(stmt)
+    return out
+
+
+def _attrs(nodes: list[ast.AST]) -> set[str]:
+    """Method names the nodes call (`x.name(...)`) or take off
+    `self` / `cls`."""
+    out = set()
+    for top in nodes:
+        for n in ast.walk(top):
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute):
+                out.add(n.func.attr)
+            elif (isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name)
+                  and n.value.id in ("self", "cls")):
+                out.add(n.attr)
+    return out
 
 
 class Scan:
@@ -145,35 +194,51 @@ class Scan:
             f = d.func if isinstance(d, ast.Call) else d
             if isinstance(f, ast.Name) and f.id == "query":
                 return True
+            # Spark itself calls the methods of an F.udtf class
+            if isinstance(f, ast.Attribute) and f.attr == "udtf":
+                return True
         return False
 
-    def edges(self) -> tuple[dict, set]:
-        """(module, name) -> the defs its body references, and the roots."""
-        edges, roots = {}, set()
+    def edges(self) -> tuple[dict, set, dict, set]:
+        """(module, name) -> the defs its body references, the roots,
+        (module, name) -> the method names its body references, and the
+        method names module-level code references. Methods are keyed
+        (module, "Class.method")."""
+        edges, roots, attrs, root_attrs = {}, set(), {}, set()
         for name, m in self.mods.items():
-            roots |= self._refs(name, self._top_level(m), self.aliases[name])
-            for dname, node in m.defs.items():
+            top = self._top_level(m)
+            roots |= self._refs(name, top, self.aliases[name])
+            root_attrs |= _attrs(top)
+            for dname, node in [*m.defs.items(), *m.methods.items()]:
+                cls = m.defs[dname.split(".")[0]]
                 scope = {**self.aliases[name], **self._imports(m, [node])}
-                edges[(name, dname)] = self._refs(name, [node], scope)
-                if self._is_root_def(name, node):
+                edges[(name, dname)] = self._refs(name, _body(node), scope)
+                attrs[(name, dname)] = _attrs(_body(node))
+                if self._is_root_def(name, cls):
                     roots.add((name, dname))
-        return edges, roots
+        return edges, roots, attrs, root_attrs
 
     def reached(self) -> set:
-        edges, todo = self.edges()
+        edges, todo, attrs, names = self.edges()
+        methods = {(name, meth) for name, m in self.mods.items()
+                   for meth in m.methods}
         seen: set = set()
         while todo:
-            key = todo.pop()
-            if key not in seen:
-                seen.add(key)
-                todo |= edges[key] - seen
+            while todo:
+                key = todo.pop()
+                if key not in seen:
+                    seen.add(key)
+                    todo |= edges[key] - seen
+                    names |= attrs[key]
+            todo = {k for k in methods - seen
+                    if k[1].split(".")[1] in names}
         return seen
 
     def unreached_public(self) -> list[str]:
         seen = self.reached()
         return sorted(f"{name}.{d}" for name, m in self.mods.items()
                       if name.startswith(PKG) and not name.startswith(ALLOWED)
-                      for d in m.defs
+                      for d in [*m.defs, *m.methods]
                       if not d.startswith("_") and (name, d) not in seen)
 
 
@@ -194,7 +259,7 @@ def test_every_public_definition_is_reached_outside_tests():
 def test_scan_keys_references_by_module():
     """`queries.pack_efficiency` calls `PK.pack_efficiency`: the edge lands
     on the packing definition, not on the registry function's own name."""
-    edges, _ = Scan(root_files()).edges()
+    edges = Scan(root_files()).edges()[0]
     q = edges[(f"{PKG}.queries", "pack_efficiency")]
     assert (f"{PKG}.operators.packing", "pack_efficiency") in q
     assert (f"{PKG}.queries", "pack_efficiency") not in q

@@ -49,7 +49,6 @@ def test_rows_only_entries_name_sibling():
     rows_only = {n: q for n, q in REGISTRY.items() if q.oracle is None}
     assert rows_only, "expected some rows-only entries"
     for name, q in rows_only.items():
-        assert "rows-only" in q.tags, f"{name}: oracle=None needs the tag"
         assert q.sibling, f"{name}: rows-only entry must name a sibling"
         assert q.sibling in REGISTRY, f"{name}: sibling {q.sibling} unknown"
         assert REGISTRY[q.sibling].oracle is not None, \

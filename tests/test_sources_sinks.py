@@ -5,8 +5,6 @@ import csv
 import json
 import os
 
-import pytest
-
 from sanef_election_dashboard_etl_spark import sinks
 from sanef_election_dashboard_etl_spark.plans.pipelines import BALLOT_SCHEMA
 from sanef_election_dashboard_etl_spark.sources.files import read_csv_dim
@@ -140,23 +138,6 @@ def test_upload_http_adapter_injectable(tmp_path):
     # default payload must be the reference's exact form dict
     # (SANEF_Uploader.py:61: payload = {'update': True, 'overwrite': True})
     assert calls[0][2] == {"update": True, "overwrite": True}
-
-
-def test_upload_http_update_overwrite_independent(tmp_path):
-    p = tmp_path / "f.csv"
-    p.write_text("x\n1\n")
-    seen = []
-
-    def poster(url, path, meta, token):
-        seen.append(meta)
-        return {"status": 201}
-
-    sinks.upload_http(str(p), "https://dash.test", 1, "tok",
-                      overwrite=False, poster=poster)
-    sinks.upload_http(str(p), "https://dash.test", 1, "tok",
-                      update=False, poster=poster)
-    assert seen == [{"update": True, "overwrite": False},
-                    {"update": False, "overwrite": True}]
 
 
 def test_timestamped_name_shape():
@@ -300,10 +281,9 @@ def test_permissive_csv_carries_corrupt_records(spark, tmp_path):
     assert rows[2][0] is None and "notanumber" in rows[2][1]
 
 
-def test_jsonl_roundtrip_and_permissive(spark, tmp_path):
+def test_jsonl_roundtrip_and_failfast(spark, tmp_path):
     """write_jsonl -> read_jsonl round-trips values exactly; a malformed
-    line lands in _corrupt_record under permissive=True and kills the
-    job under the FAILFAST default."""
+    line kills the job (FAILFAST)."""
     from pyspark.sql.types import (LongType, StringType, StructField,
                                    StructType)
 
@@ -326,13 +306,6 @@ def test_jsonl_roundtrip_and_permissive(spark, tmp_path):
     (feed / "a.jsonl").write_text(
         '{"doc_id": 1, "text": "ok"}\nnot json at all\n'
         '{"doc_id": 2, "text": "fine"}\n')
-    perm = read_jsonl(spark, str(feed), schema, permissive=True)
-    rows_ = {r["doc_id"]: r for r in perm.collect()}
-    assert rows_[1]["_corrupt_record"] is None
-    assert rows_[2]["_corrupt_record"] is None
-    bad = [r for r in perm.collect() if r["_corrupt_record"] is not None]
-    assert len(bad) == 1 and "not json" in bad[0]["_corrupt_record"]
-
     import pytest as _pytest
     strict = read_jsonl(spark, str(feed), schema)
     with _pytest.raises(Exception):
